@@ -411,16 +411,21 @@ def test_catalog_roundtrip(spark, demo_catalog):
     assert cat2.cube("demo", 0).count() == len(DEMO_TIMES) * W * H
 
 
+def _spark_tile(catalog, ds_id, var, z, x, y, **kw) -> bytes:
+    """One tile through the distributed render plan."""
+    rows = render_tiles(catalog, ds_id, var, z, tiles=[(x, y)], **kw).collect()
+    return bytes(rows[0]["png"])
+
+
 def test_tile_fast_path_matches_spark_path(demo_catalog):
     """Driver-side pyarrow fast path must produce byte-identical PNGs to the
     distributed render plan (same pruning, same fused render fn)."""
     import time as _time
 
-    fast = TileService(demo_catalog, fast_path=True)
-    slow = TileService(demo_catalog, fast_path=False)
+    fast = TileService(demo_catalog)
     for (z, x, y) in [(2, 0, 0), (2, 1, 1), (2, 3, 1), (1, 0, 0)]:
         assert fast.get_tile("demo", "kd489", z, x, y, time="current") == \
-            slow.get_tile("demo", "kd489", z, x, y, time="current")
+            _spark_tile(demo_catalog, "demo", "kd489", z, x, y, time="current")
     # out-of-range tile: fully transparent via the fast path too
     png = fast.get_tile("demo", "kd489", 2, 50, 50)
     assert decode_rgba_png(png)[..., 3].max() == 0
@@ -504,8 +509,7 @@ def test_inv_y_cube_orientation(spark, tmp_path):
         "noise", base, grid, tg, ["noise"],
         styles={"noise": StyleMeta("gray", (0.0, 1.0))},
     )
-    svc = TileService(cat, fast_path=False)
-    png = svc.get_tile("noise", "noise", tg.num_levels - 1, 0, 0)
+    png = _spark_tile(cat, "noise", "noise", tg.num_levels - 1, 0, 0)
     rgba = decode_rgba_png(png)
     # gray cmap: pixel brightness ~ value; north (top row) has value ~1,
     # south (bottom row) ~0 -> top must be brighter
@@ -513,7 +517,7 @@ def test_inv_y_cube_orientation(spark, tmp_path):
     bottom = rgba[15, :, 0].astype(int).mean()
     assert top > bottom + 100, (top, bottom)
     # fast path agrees with the Spark path on flipped grids too
-    fast = TileService(cat, fast_path=True)
+    fast = TileService(cat)
     assert fast.get_tile("noise", "noise", tg.num_levels - 1, 0, 0) == png
 
 

@@ -16,7 +16,7 @@ from xcube_server_spark.sources.png import decode_rgba_png
 
 
 @pytest.fixture(scope="module")
-def server(spark, tmp_path_factory):
+def cube_server(spark, tmp_path_factory):
     base = str(tmp_path_factory.mktemp("srv") / "demo")
     cube, grid = synth_demo_cube(spark, width=64, height=32)
     _, tg = write_cube(cube, grid, base, tile_size=32)
@@ -38,8 +38,13 @@ def server(spark, tmp_path_factory):
     places = load_place_group(spark, "pts", str(d / "pts.geojson"))
     srv = CubeServer(cat, places=places)
     srv.start()
-    yield f"http://127.0.0.1:{srv.port}"
+    yield srv
     srv.stop()
+
+
+@pytest.fixture(scope="module")
+def server(cube_server):
+    return f"http://127.0.0.1:{cube_server.port}"
 
 
 def _get(url: str):
@@ -53,6 +58,25 @@ def _get(url: str):
 def _get_json(url: str):
     status, _, body = _get(url)
     return status, json.loads(body)
+
+
+def _post_raw(url: str, headers: dict):
+    """Body-less POST with exactly the given headers (no Content-Length
+    unless given)."""
+    import http.client
+    from urllib.parse import urlparse
+
+    u = urlparse(url)
+    conn = http.client.HTTPConnection(u.hostname, u.port, timeout=30)
+    try:
+        conn.putrequest("POST", u.path)
+        for k, v in headers.items():
+            conn.putheader(k, v)
+        conn.endheaders()
+        r = conn.getresponse()
+        return r.status, r.read()
+    finally:
+        conn.close()
 
 
 def test_datasets_endpoint(server):
@@ -150,7 +174,9 @@ def test_places_endpoint_with_bbox_and_expr(server):
     assert [f["properties"]["Name"] for f in doc["features"]] == ["outside"]
 
 
-def test_errors(server):
+def test_errors(server, cube_server, monkeypatch, capsys):
+    from xcube_server_spark.server.app import MAX_BODY_BYTES
+
     status, doc = _get_json(f"{server}/nope")
     assert status == 404
     # out-of-range zoom -> clean 400, not a scan of a nonexistent level
@@ -159,6 +185,42 @@ def test_errors(server):
     status, _, body = _get(f"{server}/datasets/demo/vars/conc_tsm/tiles/0/0/zzz.png")
     assert status == 400
     assert b"must be an integer" in body
+    # a missing required query / KVP parameter is a 400 naming it
+    status, doc = _get_json(f"{server}/ts/demo/conc_chl/point?lat=51")
+    assert status == 400 and "'lon'" in doc["error"]["message"]
+    status, doc = _get_json(
+        f"{server}/wmts/kvp?Service=WMTS&Request=GetTile"
+        "&TileMatrix=0&TileCol=0&TileRow=0"
+    )
+    assert status == 400 and "'layer'" in doc["error"]["message"]
+    # unknown dataset / variable stay 404
+    status, _ = _get_json(f"{server}/ts/nope/conc_chl/point?lon=2&lat=51")
+    assert status == 404
+    # request bodies: Content-Length required, non-negative, capped
+    for path in (
+        "/ts/demo/conc_chl/geometry",
+        "/ts/demo/conc_chl/geometries",
+        "/ts/demo/conc_chl/places",
+        "/places/all",
+    ):
+        assert _post_raw(f"{server}{path}", {})[0] == 400
+        assert _post_raw(f"{server}{path}", {"Content-Length": "-1"})[0] == 400
+        assert _post_raw(f"{server}{path}", {"Content-Length": "ten"})[0] == 400
+        status, body = _post_raw(
+            f"{server}{path}", {"Content-Length": str(MAX_BODY_BYTES + 1)}
+        )
+        assert status == 413, path
+    # an unexpected failure is a 500 with a fixed message; the traceback
+    # goes to stderr, not to the client
+    def boom(*a, **kw):
+        raise RuntimeError("internal detail /secret/path")
+
+    monkeypatch.setattr(cube_server.tiles, "get_tile", boom)
+    status, _, body = _get(f"{server}/datasets/demo/vars/kd489/tiles/0/0/0.png")
+    assert status == 500
+    assert json.loads(body)["error"]["message"] == "internal server error"
+    assert b"secret" not in body and b"RuntimeError" not in body
+    assert "/secret/path" in capsys.readouterr().err
 
 
 def test_wmts_capabilities_and_kvp_tile(server):
@@ -191,24 +253,39 @@ def test_wmts_capabilities_and_kvp_tile(server):
     assert png[:8] == b"\x89PNG\r\n\x1a\n"
 
 
-def test_concurrent_tile_requests(server):
+def test_concurrent_tile_requests(server, cube_server):
     """8 parallel tile fetches through the threading server: all succeed,
-    byte-identical per coordinate (cache + Spark scheduler under concurrent
-    load)."""
+    byte-identical per URL (cache + Spark scheduler under concurrent load)
+    — with the default cache, and with one small enough to evict while
+    requests are in flight."""
     import concurrent.futures
 
-    coords = [(1, x, y) for x in range(2) for y in range(1)] * 4
+    from xcube_server_spark.cube.tiles import TileService
+
+    styles = ["", "&cbar=gray&vmin=0&vmax=10"]
+    coords = [(0, 0, 0), (1, 0, 0), (1, 1, 0)]
     urls = [
-        f"{server}/datasets/demo/vars/kd489/tiles/{z}/{x}/{y}.png?time=current"
+        f"{server}/datasets/demo/vars/kd489/tiles/{z}/{x}/{y}.png"
+        f"?time=current{style}"
         for z, x, y in coords
-    ]
-    with concurrent.futures.ThreadPoolExecutor(max_workers=8) as ex:
-        results = list(ex.map(_get, urls))
-    assert all(s == 200 for s, _, _ in results)
+        for style in styles
+    ] * 4
+    default = cube_server.tiles
+    small = TileService(cube_server.catalog, capacity=4096)
     by_url = {}
-    for url, (_, _, body) in zip(urls, results):
-        by_url.setdefault(url, set()).add(body)
+    try:
+        for tiles in (default, small):
+            cube_server.tiles = tiles
+            with concurrent.futures.ThreadPoolExecutor(max_workers=8) as ex:
+                results = list(ex.map(_get, urls))
+            assert all(s == 200 for s, _, _ in results)
+            for url, (_, _, body) in zip(urls, results):
+                by_url.setdefault(url, set()).add(body)
+    finally:
+        cube_server.tiles = default
     assert all(len(v) == 1 for v in by_url.values())  # deterministic bytes
+    assert len(small._cache) < len(by_url)  # the small cache did evict
+    assert small._cache._used == sum(len(v) for v in small._cache._data.values())
 
 
 def test_cli_serve_end_to_end(spark, tmp_path):
@@ -435,6 +512,55 @@ def test_wmts_get_feature_info(server):
     )
     assert status == 200
     assert json.loads(body)["value"] is None
+
+
+def test_wmts_get_feature_info_computed_dataset(server, cube_server):
+    """GetFeatureInfo on a computed dataset (no store of its own) reads the
+    cell from the computed frame."""
+    from pyspark.sql import functions as F
+
+    from xcube_server_spark.cube.catalog import DatasetMeta
+
+    cat = cube_server.catalog
+    base = cat.datasets["demo"]
+    cat.register(
+        DatasetMeta(
+            identifier="demo-1w",
+            title="weekly",
+            base_path="",
+            grid=base.grid,
+            tile_grid=base.tile_grid,
+            variables=base.variables,
+            computed=True,
+            function="resample_in_time",
+            input_datasets=["demo"],
+            input_params={"period": "1W"},
+        )
+    )
+    try:
+        status, doc = _get_json(
+            f"{server}/wmts/kvp?Service=WMTS&Request=GetFeatureInfo"
+            "&Layer=demo-1w.conc_chl&TileMatrix=1&TileCol=0&TileRow=0"
+            "&I=5&J=7&Time=current"
+        )
+        assert status == 200, doc
+        times = cat.times("demo-1w")
+        assert doc["time"] == times[-1]
+        # z=1 is the native level; a north-up grid: display row = lat_idx
+        (expected,) = (
+            cat.cube("demo-1w", base.tile_grid.level_for_zoom(1))
+            .filter(
+                (F.col("time_idx") == len(times) - 1)
+                & (F.col("lat_idx") == 7)
+                & (F.col("lon_idx") == 5)
+            )
+            .select("conc_chl")
+            .first()
+        )
+        assert expected is not None
+        assert abs(doc["value"] - expected) < 1e-9
+    finally:
+        del cat.datasets["demo-1w"]
 
 
 def test_tile_invalid_time_is_bad_request(server):

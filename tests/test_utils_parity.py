@@ -172,34 +172,59 @@ def test_cli_parser():
     assert args.tilecache == "1G" and args.update == 2.0
 
 
-def test_byte_cache_policies():
+def test_byte_cache_lru():
     from xcube_server_spark.cube.cache import ByteCache
 
-    for policy in ("LRU", "MRU", "LFU", "RR"):
-        c = ByteCache(capacity=100, policy=policy)
-        c.put("a", b"x" * 30)
-        c.put("b", b"x" * 30)
-        c.put("c", b"x" * 30)  # 90 > 75 -> evict down
-        assert len(c) >= 1
-    # LRU semantics: oldest unaccessed key evicted first
-    c = ByteCache(capacity=100, policy="LRU")
+    # oldest unaccessed key evicted first once past 0.75 of capacity
+    c = ByteCache(capacity=100)
     c.put("a", b"x" * 30)
     c.put("b", b"x" * 30)
     _ = c.get("a")  # refresh a
-    c.put("c", b"x" * 30)
-    assert "b" not in c and "a" in c
-    # LFU: least-frequently-used goes
-    c = ByteCache(capacity=100, policy="LFU")
-    c.put("a", b"x" * 30)
-    c.put("b", b"x" * 30)
-    for _ in range(3):
-        c.get("a")
-    c.put("c", b"x" * 30)
-    assert "b" not in c and "a" in c
-    import pytest as _pytest
+    c.put("c", b"x" * 30)  # 90 > 75 -> evict down
+    assert "b" not in c and "a" in c and "c" in c
+    assert c._used == 60
+    # the entry just written is never evicted, even over capacity
+    c.put("big", b"x" * 500)
+    assert list(c._data) == ["big"] and c._used == 500
 
-    with _pytest.raises(ValueError):
-        ByteCache(10, policy="FIFO")
+
+def test_byte_cache_thread_safe():
+    """Request threads share one cache: concurrent get/put must neither
+    raise nor lose track of the bytes held."""
+    import random
+    import sys
+    import threading
+
+    from xcube_server_spark.cube.cache import EVICTION_THRESHOLD, ByteCache
+
+    cache = ByteCache(capacity=2000)
+    errors = []
+
+    def worker(seed: int) -> None:
+        rng = random.Random(seed)
+        try:
+            for _ in range(20000):
+                key = rng.randrange(64)
+                if rng.random() < 0.5:
+                    cache.get(key)
+                else:
+                    cache.put(key, b"x" * rng.randrange(1, 200))
+        except Exception as e:  # collected: a thread's exception is lost
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(i,)) for i in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+    finally:
+        sys.setswitchinterval(old)
+    assert errors == []
+    assert cache._used == sum(len(v) for v in cache._data.values())
+    assert cache._used <= EVICTION_THRESHOLD * cache.capacity or len(cache) == 1
 
 
 def test_measure_time():

@@ -1,31 +1,32 @@
-"""Byte-cache with pluggable eviction policies (SURVEY.md §2.1/§4 cache
-hierarchy; reference ``xcube_server/cache.py:174-197`` policies, ``:202-410``
-cache mechanics, 0.75 eviction threshold ``xcube_server/context.py:81-91``).
+"""Tile byte caches (SURVEY.md §2.1/§4 cache hierarchy): a memory LRU and
+an optional disk tier. The reference serves tiles from one LRU memory cache
+(``xcube_server/context.py:80-93``; mechanics ``xcube_server/cache.py:202-410``)
+and evicts once the cache passes 0.75 of its capacity.
 
-Policies: LRU (evict least-recently-used), MRU (most-recently-used), LFU
-(least-frequently-used), RR (random replacement, deterministic seed). The
-TileService composes this for PNG bytes; anything hashable→bytes works.
+The TileService composes these for PNG bytes; anything hashable→bytes works.
 """
 
 from __future__ import annotations
 
-import random
+import threading
+from collections import OrderedDict
 
 EVICTION_THRESHOLD = 0.75  # fraction of capacity that triggers eviction
 
 
 class ByteCache:
-    def __init__(self, capacity: int, policy: str = "LRU", seed: int = 42):
-        policy = policy.upper()
-        if policy not in ("LRU", "MRU", "LFU", "RR"):
-            raise ValueError(f"unknown cache policy {policy!r}")
+    """Memory LRU, safe to share across request threads.
+
+    A ``put`` that takes the cache past ``EVICTION_THRESHOLD`` of capacity
+    evicts least-recently-used entries until it is back under, but never the
+    entry just written.
+    """
+
+    def __init__(self, capacity: int):
         self.capacity = capacity
-        self.policy = policy
-        self._data: dict = {}
-        self._order: list = []  # access recency, oldest first
-        self._freq: dict = {}
+        self._data: OrderedDict = OrderedDict()  # oldest first
         self._used = 0
-        self._rng = random.Random(seed)
+        self._lock = threading.Lock()
 
     def __len__(self) -> int:
         return len(self._data)
@@ -34,38 +35,23 @@ class ByteCache:
         return key in self._data
 
     def get(self, key) -> bytes | None:
-        if key not in self._data:
-            return None
-        self._touch(key)
-        return self._data[key]
+        with self._lock:
+            value = self._data.get(key)
+            if value is not None:
+                self._data.move_to_end(key)
+            return value
 
     def put(self, key, value: bytes) -> None:
-        if key in self._data:
-            self._used -= len(self._data[key])
-        self._data[key] = value
-        self._used += len(value)
-        self._touch(key)
-        while self._used > self.capacity * EVICTION_THRESHOLD and len(self._data) > 1:
-            victim = self._pick_victim()
-            self._used -= len(self._data.pop(victim))
-            self._order.remove(victim)
-            self._freq.pop(victim, None)
-
-    def _touch(self, key) -> None:
-        if key in self._order:
-            self._order.remove(key)
-        self._order.append(key)
-        self._freq[key] = self._freq.get(key, 0) + 1
-
-    def _pick_victim(self):
-        candidates = [k for k in self._order if k != self._order[-1]] or self._order
-        if self.policy == "LRU":
-            return candidates[0]
-        if self.policy == "MRU":
-            return candidates[-1]
-        if self.policy == "LFU":
-            return min(candidates, key=lambda k: (self._freq.get(k, 0), self._order.index(k)))
-        return self._rng.choice(candidates)  # RR
+        with self._lock:
+            old = self._data.pop(key, None)
+            if old is not None:
+                self._used -= len(old)
+            self._data[key] = value
+            self._used += len(value)
+            limit = self.capacity * EVICTION_THRESHOLD
+            while self._used > limit and len(self._data) > 1:
+                _, victim = self._data.popitem(last=False)
+                self._used -= len(victim)
 
 
 class FileByteCache:

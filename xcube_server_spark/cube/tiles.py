@@ -145,40 +145,34 @@ def render_tiles(
 
 
 class TileService:
-    """Single-tile serving path with a byte cache (T9) and a driver-side
-    fast path (SURVEY.md §7.3-7).
+    """Single-tile serving path: a byte cache (T9) in front of a driver-side
+    read (SURVEY.md §7.3-7).
 
-    The cache is the app-layer analog of the reference's memory tile cache
-    (``xcube_server/cache.py:202-410`` with LRU policy,
-    ``xcube_server/context.py:80-93``): Spark jobs have ~100 ms overhead, so
-    repeated tile hits must not touch Spark at all.
+    The cache is the app-layer analog of the reference's LRU memory tile
+    cache (``xcube_server/context.py:80-93``): Spark jobs have ~100 ms
+    overhead, so repeated tile hits must not touch Spark at all.
 
-    Fast path: a single tile touches one time_idx partition and a handful of
-    row groups; reading them with pyarrow on the driver (same pruning
-    predicates) costs milliseconds — the latency class of the reference's
-    in-process dask reads — while batch/export rendering still goes through
-    the distributed ``render_tiles`` plan. Falls back to Spark automatically
-    for computed datasets (no parquet path to read).
+    A miss reads its window where the dataset lives. A stored cube on a
+    local disk is read with pyarrow on the driver (one ``time_idx``
+    partition, row-group pruning on the cell indices) in milliseconds — the
+    latency class of the reference's in-process dask reads. A computed cube,
+    or one in an object store, has no local files, and renders through the
+    distributed ``render_tiles`` plan instead.
     """
 
     def __init__(
         self,
         catalog: CubeCatalog,
         capacity: int = 512 * 1024 * 1024,
-        fast_path: bool = True,
-        policy: str = "LRU",
         trace_perf: bool = False,
         file_cache_path: str | None = None,
         file_cache_capacity: int = 20 * 1000**3,
     ):
         self.catalog = catalog
         self.capacity = capacity
-        self.fast_path = fast_path
         # --traceperf parity (xcube_server/cli.py:58-59, perf.py:33-52)
         self.trace_perf = trace_perf
-        # pluggable eviction policy (LRU/MRU/LFU/RR) — parity with the
-        # reference's cache policies (xcube_server/cache.py:174-197)
-        self._cache = ByteCache(capacity, policy=policy)
+        self._cache = ByteCache(capacity)
         # optional second-level disk tier, default OFF with a 20 GB cap —
         # parity with xcube_server/defaults.py:42-46
         self._file_cache = (
@@ -187,49 +181,59 @@ class TileService:
             else None
         )
 
-    def _read_tile_fast(
-        self, ds_id: str, var: str, z: int, x: int, y: int, t_idx: int
-    ) -> "pd.DataFrame | None":
-        """pyarrow read of one tile window: partition-dir pruning on
-        time_idx + row-group predicate pruning on (lat_idx, lon_idx)."""
+    def _read_window(
+        self, ds_id: str, var: str, level: int, t_idx: int,
+        lat: tuple[int, int], lon: tuple[int, int],
+    ) -> "pyarrow.Table | None":
+        """pyarrow read of the cells ``lat[0] <= lat_idx < lat[1]``,
+        ``lon[0] <= lon_idx < lon[1]`` of one time step: partition-dir
+        pruning on time_idx + row-group predicate pruning on the indices.
+        None when the level has no local files to read (computed or
+        object-store datasets)."""
         import pyarrow.dataset as pads
 
         from ..sources.paths import local_part_glob
-        from .grid import level_sizes
 
         meta = self.catalog.datasets[ds_id]
         if meta.computed or not meta.base_path:
             return None
+        # level_path follows a `.link` pointer, so grafted levels keep the
+        # driver read as long as the target is a local table.
+        part_dir = f"{self.catalog.level_path(ds_id, level)}/time_idx={t_idx}"
+        if not local_part_glob(part_dir):
+            return None
+        f = pads.field
+        filt = (
+            (f("lat_idx") >= lat[0])
+            & (f("lat_idx") < lat[1])
+            & (f("lon_idx") >= lon[0])
+            & (f("lon_idx") < lon[1])
+        )
+        return pads.dataset(part_dir, format="parquet").to_table(
+            columns=["lat_idx", "lon_idx", var], filter=filt
+        )
+
+    def _read_tile_fast(
+        self, ds_id: str, var: str, z: int, x: int, y: int, t_idx: int
+    ) -> "pd.DataFrame | None":
+        """Driver read of one tile window, with ``disp_row`` in display
+        space; None when the dataset must render through Spark."""
+        from .grid import level_sizes
+
+        meta = self.catalog.datasets[ds_id]
         tg = meta.tile_grid
         level = tg.level_for_zoom(z)
-        # Driver-side pyarrow is a LOCAL-store fast path; object-store tiles
-        # (s3a://...) return None here and take the scheme-agnostic Spark read.
-        # level_path follows a `.link` pointer, so grafted levels keep the
-        # fast path as long as the target is a local table.
-        part_dir = f"{self.catalog.level_path(ds_id, level)}/time_idx={t_idx}"
-        parts = local_part_glob(part_dir)
-        if not parts:
-            return None
         h_level = level_sizes(meta.grid.width, meta.grid.height, tg.num_levels)[level][1]
         # display rows [y*th, (y+1)*th) -> storage lat_idx range (flipped
         # for inv_y grids)
         if meta.grid.inv_y:
-            lat_lo = h_level - (y + 1) * tg.tile_height
-            lat_hi = h_level - y * tg.tile_height  # exclusive
+            lat = (h_level - (y + 1) * tg.tile_height, h_level - y * tg.tile_height)
         else:
-            lat_lo = y * tg.tile_height
-            lat_hi = (y + 1) * tg.tile_height
-        dataset = pads.dataset(part_dir, format="parquet")
-        f = pads.field
-        filt = (
-            (f("lat_idx") >= lat_lo)
-            & (f("lat_idx") < lat_hi)
-            & (f("lon_idx") >= x * tg.tile_width)
-            & (f("lon_idx") < (x + 1) * tg.tile_width)
-        )
-        table = dataset.to_table(
-            columns=["lat_idx", "lon_idx", var], filter=filt
-        )
+            lat = (y * tg.tile_height, (y + 1) * tg.tile_height)
+        lon = (x * tg.tile_width, (x + 1) * tg.tile_width)
+        table = self._read_window(ds_id, var, level, t_idx, lat, lon)
+        if table is None:
+            return None
         pdf = table.to_pandas()
         if meta.grid.inv_y:
             pdf["disp_row"] = (h_level - 1) - pdf["lat_idx"]
@@ -292,32 +296,26 @@ class TileService:
             if spilled is not None:
                 self._cache.put(key, spilled)  # promote to memory tier
                 return spilled
-        png = None
-        if self.fast_path:
-            t_idx, _ = _nearest_time(self.catalog.times(ds_id), time)
-            pdf = self._read_tile_fast(ds_id, var, z, x, y, t_idx)
-            if pdf is not None:
-                tg = meta.tile_grid
-                render = _render_pdf_factory(
-                    tg.tile_width, tg.tile_height, *st.value_range,
-                    st.color_bar, var,
-                )
-                png = bytes(render((y, x), pdf)["png"][0])
-        if png is None:
-            rows = (
-                render_tiles(
-                    self.catalog, ds_id, var, z, time=time, style=st,
-                    tiles=[(x, y)],
-                )
-                .collect()
+        tg = meta.tile_grid
+        t_idx, _ = _nearest_time(self.catalog.times(ds_id), time)
+        pdf = self._read_tile_fast(ds_id, var, z, x, y, t_idx)
+        if pdf is not None:
+            render = _render_pdf_factory(
+                tg.tile_width, tg.tile_height, *st.value_range,
+                st.color_bar, var,
             )
+            png = bytes(render((y, x), pdf)["png"][0])
+        else:
+            rows = render_tiles(
+                self.catalog, ds_id, var, z, time=time, style=st,
+                tiles=[(x, y)],
+            ).collect()
             if rows:
                 png = bytes(rows[0]["png"])
             else:
                 # Out-of-range tile: all-NaN → fully transparent (the
                 # reference still renders padded tiles,
                 # test/controllers/test_tiles.py:18).
-                tg = meta.tile_grid
                 blank = np.full((tg.tile_height, tg.tile_width), np.nan)
                 png = encode_rgba_png(
                     apply_cmap(blank, *st.value_range, st.color_bar)
@@ -341,15 +339,13 @@ class TileService:
         """WMTS ``GetFeatureInfo``: the variable value under pixel (i, j)
         of tile (z, x, y) — IMPLEMENTED where the reference raises
         ``'Request type "GetFeatureInfo" not yet implemented'``
-        (``xcube_server/handlers.py:103-104``), the same finish-the-stub
-        policy as ``query_expr`` (P11).
+        (``xcube_server/handlers.py:103-104``), finishing the stub as
+        ``query_expr`` does (P11).
 
         Pixel → cell is pure index arithmetic on the level grid (display
         row flips for ``inv_y`` grids exactly as the tile render does);
-        the value read is the tile fast path narrowed to ONE cell
-        (partition-dir pruning on ``time_idx``, row-group predicate on the
-        cell indices), with the same Spark fallback for computed or
-        object-store datasets. NaN/absent cells report ``value: None``
+        the value read is the tile's window read narrowed to ONE cell, with
+        the same Spark read for computed or object-store datasets. NaN/absent cells report ``value: None``
         (the reference's masked-pixel contract).
         """
         import math
@@ -399,38 +395,25 @@ class TileService:
         self, ds_id: str, var: str, level: int, lat_idx: int, col: int,
         t_idx: int,
     ) -> float | None:
-        """One-cell read: pyarrow fast path, Spark fallback."""
-        meta = self.catalog.datasets[ds_id]
-        if self.fast_path and not meta.computed and meta.base_path:
-            import pyarrow.dataset as pads
-
-            from ..sources.paths import local_part_glob
-
-            part_dir = (
-                f"{self.catalog.level_path(ds_id, level)}/time_idx={t_idx}"
-            )
-            if local_part_glob(part_dir):
-                f = pads.field
-                table = pads.dataset(part_dir, format="parquet").to_table(
-                    columns=[var],
-                    filter=(f("lat_idx") == lat_idx) & (f("lon_idx") == col),
+        """One-cell read: the driver window read narrowed to one cell, else
+        the level's Spark frame (computed or object-store datasets)."""
+        table = self._read_window(
+            ds_id, var, level, t_idx, (lat_idx, lat_idx + 1), (col, col + 1)
+        )
+        if table is not None:
+            values = table.column(var).to_pylist()
+        else:
+            values = [
+                r[0]
+                for r in self.catalog.cube(ds_id, level)
+                .filter(
+                    (F.col("time_idx") == t_idx)
+                    & (F.col("lat_idx") == lat_idx)
+                    & (F.col("lon_idx") == col)
                 )
-                if table.num_rows == 0:
-                    return None
-                v = table.column(var)[0].as_py()
-                return float(v) if v is not None else None
-        df = self.catalog.spark.read.parquet(
-            self.catalog.level_path(ds_id, level)
-        )
-        rows = (
-            df.filter(
-                (F.col("time_idx") == t_idx)
-                & (F.col("lat_idx") == lat_idx)
-                & (F.col("lon_idx") == col)
-            )
-            .select(var)
-            .collect()
-        )
-        if not rows or rows[0][0] is None:
+                .select(var)
+                .collect()
+            ]
+        if not values or values[0] is None:
             return None
-        return float(rows[0][0])
+        return float(values[0])

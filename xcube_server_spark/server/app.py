@@ -33,7 +33,9 @@ isn't starved by long analytics queries.
 from __future__ import annotations
 
 import json
+import sys
 import threading
+import traceback
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
@@ -62,23 +64,52 @@ from ..sources.static_tiles import StaticTileSource
 from .wmts import get_wmts_capabilities_xml, parse_kvp
 
 
+MAX_BODY_BYTES = 16 * 1024 * 1024  # largest JSON request body accepted
+
+
+class PayloadTooLarge(Exception):
+    """A request body over ``MAX_BODY_BYTES`` (HTTP 413)."""
+
+
+class _Params(dict):
+    """Query/KVP parameters: a missing required one is a 400 naming it,
+    not the 404 a bare ``KeyError`` means."""
+
+    def __missing__(self, key):
+        raise ValueError(f"missing required parameter {key!r}")
+
+
+def _read_json(h):
+    """The request's JSON body, or None when it is empty."""
+    length = h.headers.get("Content-Length")
+    if length is None or not length.strip().isdecimal():
+        raise ValueError(
+            f"Content-Length must be a non-negative integer, got {length!r}"
+        )
+    length = int(length)
+    if length > MAX_BODY_BYTES:
+        raise PayloadTooLarge(f"request body over {MAX_BODY_BYTES} bytes")
+    raw = h.rfile.read(length)
+    return json.loads(raw) if raw else None
+
+
+def _ts_result(r) -> dict:
+    """One time-series row in the reference's response shape
+    (``controllers/time_series.py:135-145``)."""
+    return {
+        "date": r["date"],
+        "result": {
+            "totalCount": r["total_count"],
+            "validCount": r["valid_count"],
+            "average": r["average"],
+        },
+    }
+
+
 def _ts_rows(df: DataFrame | None) -> dict:
-    """Reference TS response shape (``controllers/time_series.py:135-145``)."""
     if df is None:
         return {"results": []}
-    return {
-        "results": [
-            {
-                "date": r["date"],
-                "result": {
-                    "totalCount": r["total_count"],
-                    "validCount": r["valid_count"],
-                    "average": r["average"],
-                },
-            }
-            for r in df.collect()
-        ]
-    }
+    return {"results": [_ts_result(r) for r in df.collect()]}
 
 
 class CubeServer:
@@ -116,25 +147,24 @@ class CubeServer:
             def _error(self, code: int, msg: str) -> None:
                 self._json({"error": {"status": code, "message": msg}}, code)
 
-            def do_GET(self):
+            def _handle(self, method: str) -> None:
                 try:
-                    outer._route(self, "GET")
-                except KeyError as e:
+                    outer._route(self, method)
+                except PayloadTooLarge as e:
+                    self._error(413, str(e))
+                except KeyError as e:  # unknown route, dataset or variable
                     self._error(404, f"not found: {e}")
                 except ValueError as e:
                     self._error(400, str(e))
-                except Exception as e:  # pragma: no cover
-                    self._error(500, f"{type(e).__name__}: {e}")
+                except Exception:
+                    traceback.print_exc(file=sys.stderr)
+                    self._error(500, "internal server error")
+
+            def do_GET(self):
+                self._handle("GET")
 
             def do_POST(self):
-                try:
-                    outer._route(self, "POST")
-                except KeyError as e:
-                    self._error(404, f"not found: {e}")
-                except ValueError as e:
-                    self._error(400, str(e))
-                except Exception as e:  # pragma: no cover
-                    self._error(500, f"{type(e).__name__}: {e}")
+                self._handle("POST")
 
         self.httpd = ThreadingHTTPServer((host, port), Handler)
         self.port = self.httpd.server_address[1]
@@ -167,7 +197,7 @@ class CubeServer:
 
     def _route(self, h, method: str) -> None:
         url = urlparse(h.path)
-        q = {k: v[0] for k, v in parse_qs(url.query).items()}
+        q = _Params((k, v[0]) for k, v in parse_qs(url.query).items())
         parts = [p for p in url.path.split("/") if p]
         # request threads are per-request, so the thread-local pool property
         # never leaks across requests
@@ -190,7 +220,7 @@ class CubeServer:
             # (case-insensitive keys, xcube_server/handlers.py:57-117)
             base = f"http://{h.headers.get('Host', 'localhost')}"
             if parts == ["wmts", "kvp"]:
-                kvp = parse_kvp(q)
+                kvp = _Params(parse_kvp(q))
                 if kvp.get("service", "WMTS").upper() != "WMTS":
                     raise ValueError("Service must be WMTS")
                 req = kvp.get("request", "").lower()
@@ -352,8 +382,7 @@ class CubeServer:
             h._json(get_time_series_info(self.catalog))
         elif method == "POST" and len(parts) == 4 and parts[0] == "ts" and parts[3] in ("geometries", "places"):
             # geometry-collection / feature-collection fan-out (U2): one job
-            length = int(h.headers.get("Content-Length", 0))
-            body = json.loads(h.rfile.read(length) or b"{}")
+            body = _read_json(h) or {}
             if parts[3] == "geometries":
                 geoms = body.get("geometries", [])
             else:
@@ -368,26 +397,10 @@ class CubeServer:
                 start=q.get("startDate"),
                 end=q.get("endDate"),
             )
-            rows = df.collect()
-            results = []
-            for gi in range(len(geoms)):
-                sub = [r for r in rows if r["geometry_id"] == gi]
-                results.append(
-                    {
-                        "results": [
-                            {
-                                "date": r["date"],
-                                "result": {
-                                    "totalCount": r["total_count"],
-                                    "validCount": r["valid_count"],
-                                    "average": r["average"],
-                                },
-                            }
-                            for r in sub
-                        ]
-                    }
-                )
-            h._json({"results": results})
+            results = [[] for _ in geoms]
+            for r in df.collect():
+                results[r["geometry_id"]].append(_ts_result(r))
+            h._json({"results": [{"results": rs} for rs in results]})
         elif method == "GET" and len(parts) == 4 and parts[0] == "ts" and parts[3] == "point":
             df = time_series_for_point(
                 self.catalog,
@@ -400,9 +413,7 @@ class CubeServer:
             )
             h._json(_ts_rows(df))
         elif method == "POST" and len(parts) == 4 and parts[0] == "ts" and parts[3] == "geometry":
-            length = int(h.headers.get("Content-Length", 0))
-            body = json.loads(h.rfile.read(length) or b"{}")
-            geom = parse_query_geometry(body=body)
+            geom = parse_query_geometry(body=_read_json(h) or {})
             df = time_series_for_geometry(
                 self.catalog,
                 parts[1],
@@ -456,9 +467,7 @@ class CubeServer:
                 # FindPlacesHandler.post: query geometry as a GeoJSON body
                 # (geometry, Feature or FeatureCollection —
                 # xcube_server/handlers.py:273-283)
-                length = int(h.headers.get("Content-Length", 0))
-                body = json.loads(h.rfile.read(length) or b"null")
-                geom = parse_query_geometry(body=body)
+                geom = parse_query_geometry(body=_read_json(h))
             else:
                 if q.get("geom") and q.get("bbox"):
                     raise ValueError(

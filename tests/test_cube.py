@@ -197,6 +197,121 @@ def test_time_range_filter(demo_catalog):
     assert df.count() == 4
 
 
+def _rows(rows) -> list[tuple]:
+    return [
+        (r["date"], r["total_count"], r["valid_count"], r["average"])
+        for r in rows
+    ]
+
+
+def _assert_same_rows(got, want) -> None:
+    assert [r[:3] for r in _rows(got)] == [r[:3] for r in _rows(want)]
+    for g, w in zip(_rows(got), _rows(want)):
+        assert g[3] == (None if w[3] is None else pytest.approx(w[3], rel=1e-9))
+
+
+def test_driver_series_match_spark_plans(demo_catalog):
+    """The driver read answers each time-series route row for row like its
+    Spark plan: random polygons on, across and off the grid edges, points in
+    and out, both NULL patterns (conc_chl's blob, conc_tsm's all-NULL
+    steps), with and without an inclusive date range."""
+    from xcube_server_spark.cube.timeseries import (
+        local_series_for_geometry,
+        local_series_for_geometry_collection,
+        local_series_for_point,
+    )
+
+    rng = np.random.default_rng(7)
+    geoms = []
+    for _ in range(10):
+        cx, cy = rng.uniform(-0.3, 5.3), rng.uniform(49.9, 52.6)
+        r = rng.uniform(0.02, 0.5)
+        angles = np.sort(rng.uniform(0.0, 2 * math.pi, 5))
+        ring = [[cx + r * math.cos(a), cy + r * math.sin(a)] for a in angles]
+        geoms.append({"type": "Polygon", "coordinates": [ring + [ring[0]]]})
+    geoms.append({"type": "Point", "coordinates": [2.1, 51.4]})
+    geoms.append({"type": "Point", "coordinates": [7.0, 51.4]})  # off the grid
+    for var, start, end in (
+        ("conc_chl", None, None),
+        ("conc_tsm", None, None),
+        ("kd489", "2017-01-25 09:35:51", "2017-01-28 09:58:11"),
+    ):
+        got = local_series_for_geometry_collection(
+            demo_catalog, "demo", var, geoms, start, end
+        )
+        spark_rows = time_series_for_geometry_collection(
+            demo_catalog, "demo", var, geoms, start, end
+        ).collect()
+        assert len(got) == len(geoms)
+        for gi, rows in enumerate(got):
+            _assert_same_rows(rows, [r for r in spark_rows if r["geometry_id"] == gi])
+    # the single-geometry route counts the mask, the point route the rows
+    for geom in (geoms[0], geoms[3], geoms[-2]):
+        want = time_series_for_geometry(demo_catalog, "demo", "conc_tsm", geom)
+        got = local_series_for_geometry(demo_catalog, "demo", "conc_tsm", geom)
+        _assert_same_rows(got, [] if want is None else want.collect())
+    for lon, lat in ((2.1, 51.4), (0.0, 52.5), (-150.0, -30.0)):
+        want = time_series_for_point(
+            demo_catalog, "demo", "conc_chl", lon, lat, "2017-01-16", None
+        )
+        got = local_series_for_point(
+            demo_catalog, "demo", "conc_chl", lon, lat, "2017-01-16", None
+        )
+        _assert_same_rows(got, [] if want is None else want.collect())
+
+
+def test_driver_series_sparse_cube_subsecond_times(spark, tmp_path):
+    """On a cube with missing rows and sub-second timestamps the driver
+    read still answers like the Spark plans: no row for a step without
+    stored rows, the polygon route's mask size against the rows found of
+    the point and fan-out routes, dates rounded half up to the second
+    (two steps here print as the same second)."""
+    from xcube_server_spark.cube.timeseries import (
+        local_series_for_geometry,
+        local_series_for_geometry_collection,
+        local_series_for_point,
+    )
+
+    times = (
+        "1969-12-31 23:59:59.5",
+        "2017-01-16 10:09:22.4999",
+        "2017-01-16 10:09:22.5",
+        "2017-01-16 23:59:59.7",
+    )
+    cube, grid = synth_demo_cube(spark, width=16, height=8, times=times)
+    # step 1 lacks the north-west quarter; cell (2, 3) is missing throughout
+    cube = cube.filter(
+        ~((F.col("time_idx") == 1) & (F.col("lat_idx") < 4) & (F.col("lon_idx") < 8))
+        & ~((F.col("lat_idx") == 2) & (F.col("lon_idx") == 3))
+    )
+    _, tg = write_cube(cube, grid, str(tmp_path / "sparse"), tile_size=8)
+    cat = CubeCatalog(spark)
+    cat.register_written_cube("sparse", str(tmp_path / "sparse"), grid, tg, ["conc_chl"])
+    west = {"type": "Polygon", "coordinates": [  # partly in the step-1 gap
+        [[0.2, 51.4], [3.0, 51.4], [3.0, 52.3], [0.2, 52.3], [0.2, 51.4]]]}
+    point = {"type": "Point", "coordinates": [0.5, 52.3]}  # in the gap at step 1
+    missing = {"type": "Point", "coordinates": [
+        grid.lon_of(3), grid.lat_of(2)]}  # a cell with no rows at all
+    got = local_series_for_geometry(cat, "sparse", "conc_chl", west)
+    want = time_series_for_geometry(cat, "sparse", "conc_chl", west).collect()
+    _assert_same_rows(got, want)
+    assert len(got) == len(times) and got[1]["total_count"] == len(rasterize_mask(west, grid))
+    assert [r["date"] for r in got[1:3]] == ["2017-01-16T10:09:22Z", "2017-01-16T10:09:23Z"]
+    for lon, lat in (point["coordinates"], missing["coordinates"]):
+        got = local_series_for_point(cat, "sparse", "conc_chl", lon, lat)
+        want = time_series_for_point(cat, "sparse", "conc_chl", lon, lat)
+        _assert_same_rows(got, want.collect())
+    assert [r["date"] for r in local_series_for_point(
+        cat, "sparse", "conc_chl", *point["coordinates"])] == [
+        "1970-01-01T00:00:00Z", "2017-01-16T10:09:23Z", "2017-01-17T00:00:00Z"]
+    geoms = [west, point, missing]
+    got = local_series_for_geometry_collection(cat, "sparse", "conc_chl", geoms)
+    rows = time_series_for_geometry_collection(cat, "sparse", "conc_chl", geoms).collect()
+    for gi, mine in enumerate(got):
+        _assert_same_rows(mine, [r for r in rows if r["geometry_id"] == gi])
+    assert got[2] == []
+
+
 # -- tiles -------------------------------------------------------------------
 
 

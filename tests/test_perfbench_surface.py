@@ -81,6 +81,67 @@ def test_entry_points_looked_up_by_module(catalog, monkeypatch):
     assert calls[2:] == ["render_tiles"]
 
 
+def test_time_series_entry_points_looked_up_by_module(catalog, monkeypatch):
+    """A time-series request rasterizes through ``timeseries``' module
+    global ``rasterize_mask`` (the tracer's ``rasterize.mask`` span) on the
+    driver read, and runs a Spark plan through ``app``'s globals
+    ``time_series_for_*`` (its ``plan.ts`` span) when the driver read
+    declines, here for a computed dataset."""
+    import json
+    import urllib.request
+
+    calls = []
+
+    def spy(module, name):
+        fn = getattr(module, name)
+
+        def wrapped(*args, **kwargs):
+            calls.append(name)
+            return fn(*args, **kwargs)
+
+        monkeypatch.setattr(module, name, wrapped)
+
+    spy(timeseries, "rasterize_mask")
+    for name in (
+        "time_series_for_point",
+        "time_series_for_geometry",
+        "time_series_for_geometry_collection",
+    ):
+        spy(app, name)
+    polygon = {"type": "Polygon", "coordinates": [
+        [[1.0, 51.0], [2.0, 51.0], [2.0, 52.0], [1.0, 52.0], [1.0, 51.0]]]}
+    server = app.CubeServer(catalog)
+    server.start()
+
+    def ask(ds, op, body=None):
+        url = f"http://127.0.0.1:{server.port}/ts/{ds}/conc_chl/{op}"
+        if body is None:
+            url += "?lon=1.5&lat=51.5"
+        req = urllib.request.Request(
+            url, data=None if body is None else json.dumps(body).encode()
+        )
+        with urllib.request.urlopen(req, timeout=120) as r:
+            assert r.status == 200 and json.loads(r.read())["results"]
+
+    try:
+        ask("demo", "point")
+        ask("demo", "geometry", polygon)
+        ask("demo", "geometries", {"geometries": [polygon]})
+        assert calls == ["rasterize_mask", "rasterize_mask"]
+        del calls[:]
+        ask("demo-1w", "point")
+        ask("demo-1w", "geometry", polygon)
+        ask("demo-1w", "geometries", {"geometries": [polygon]})
+    finally:
+        server.stop()
+        server.httpd.server_close()
+    assert [c for c in calls if c != "rasterize_mask"] == [
+        "time_series_for_point",
+        "time_series_for_geometry",
+        "time_series_for_geometry_collection",
+    ]
+
+
 def test_traced_entry_points():
     """Every name the tracer replaces, with the calls the engine makes."""
     _accepts(cache.ByteCache.get, None, "key")

@@ -196,6 +196,19 @@ def test_errors(server, cube_server, monkeypatch, capsys):
     # unknown dataset / variable stay 404
     status, _ = _get_json(f"{server}/ts/nope/conc_chl/point?lon=2&lat=51")
     assert status == 404
+    # a malformed time-series date bound is a 400 naming it
+    for name in ("startDate", "endDate"):
+        status, doc = _get_json(
+            f"{server}/ts/demo/conc_chl/point?lon=2&lat=51&{name}=garbage"
+        )
+        assert status == 400 and f"'{name}'" in doc["error"]["message"]
+        req = urllib.request.Request(
+            f"{server}/ts/demo/conc_chl/geometry?{name}=2017-13-01",
+            data=json.dumps(_polygon(_INSIDE)).encode(), method="POST",
+        )
+        with pytest.raises(urllib.error.HTTPError) as e:
+            urllib.request.urlopen(req, timeout=60)
+        assert e.value.code == 400 and name.encode() in e.value.read()
     # request bodies: Content-Length required, non-negative, capped
     for path in (
         "/ts/demo/conc_chl/geometry",
@@ -457,6 +470,269 @@ def test_ts_places_fanout_endpoint(server):
     status, doc = _post_json(f"{server}/ts/demo/conc_chl/places", body)
     assert status == 200 and len(doc["results"]) == 1
     assert doc["results"][0]["results"]
+
+
+# -- time series: driver read vs Spark plan ---------------------------------
+
+_INSIDE = [[1.0, 51.0], [2.0, 51.0], [2.0, 52.0], [1.0, 52.0], [1.0, 51.0]]
+_PARTLY = [[-0.6, 50.3], [0.7, 50.2], [0.8, 51.1], [-0.5, 51.2], [-0.6, 50.3]]
+_OUTSIDE = [[10.0, 10.0], [11.0, 10.0], [11.0, 11.0], [10.0, 11.0], [10.0, 10.0]]
+
+
+def _polygon(ring) -> dict:
+    return {"type": "Polygon", "coordinates": [ring]}
+
+
+def _ts_request(url: str, body=None, rid: str | None = None):
+    """(status, JSON) of a GET, or of a POST when ``body`` is given."""
+    headers = {"Content-Type": "application/json"}
+    if rid is not None:
+        headers["X-Request-Id"] = rid
+    req = urllib.request.Request(
+        url, headers=headers, method="GET" if body is None else "POST",
+        data=None if body is None else json.dumps(body).encode(),
+    )
+    try:
+        with urllib.request.urlopen(req, timeout=120) as r:
+            return r.status, json.loads(r.read())
+    except urllib.error.HTTPError as e:
+        return e.code, json.loads(e.read())
+
+
+def _jobs(catalog, rid: str) -> list[int]:
+    """Spark jobs launched under job group ``rid``, once the listener bus
+    has caught up."""
+    sc = catalog.spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return sorted(sc.statusTracker().getJobIdsForGroup(rid))
+
+
+def _spark_series(rows) -> list[dict]:
+    return [
+        {"date": r["date"], "result": {"totalCount": r["total_count"],
+                                       "validCount": r["valid_count"],
+                                       "average": r["average"]}}
+        for r in rows
+    ]
+
+
+def _assert_same_series(got: list[dict], want: list[dict]) -> None:
+    assert [g["date"] for g in got] == [w["date"] for w in want]
+    for g, w in zip(got, want):
+        gr, wr = g["result"], w["result"]
+        assert (gr["totalCount"], gr["validCount"]) == (
+            wr["totalCount"], wr["validCount"]
+        ), g["date"]
+        if wr["average"] is None:
+            assert gr["average"] is None, g["date"]
+        else:
+            assert gr["average"] == pytest.approx(wr["average"], rel=1e-9)
+
+
+def _spark_answer(cat, ds, var, op, body=None, start=None, end=None, **point):
+    """What the Spark plan of route ``op`` answers, in the HTTP shape."""
+    from xcube_server_spark.cube.timeseries import (
+        time_series_for_geometry,
+        time_series_for_geometry_collection,
+        time_series_for_point,
+    )
+
+    ts = dict(start=start, end=end)
+    if op == "point":
+        df = time_series_for_point(cat, ds, var, **point, **ts)
+    elif op == "geometry":
+        df = time_series_for_geometry(cat, ds, var, body, **ts)
+    else:
+        geoms = body.get("geometries") or [f["geometry"] for f in body["features"]]
+        per_geom = [[] for _ in geoms]
+        for r in time_series_for_geometry_collection(cat, ds, var, geoms, **ts).collect():
+            per_geom[r["geometry_id"]].append(r)
+        return {"results": [{"results": _spark_series(rs)} for rs in per_geom]}
+    return {"results": _spark_series([] if df is None else df.collect())}
+
+
+def _assert_same_answer(got: dict, want: dict) -> None:
+    assert len(got["results"]) == len(want["results"])
+    if want["results"] and "results" in want["results"][0]:
+        for g, w in zip(got["results"], want["results"]):
+            _assert_same_series(g["results"], w["results"])
+    else:
+        _assert_same_series(got["results"], want["results"])
+
+
+def test_ts_routes_match_spark_plans_without_a_job(server, cube_server):
+    """Every time-series route of a stored cube answers from the driver
+    read, row for row what the route's Spark plan answers, and launches no
+    Spark job."""
+    cat = cube_server.catalog
+    collection = {"type": "GeometryCollection", "geometries": [
+        {"type": "Point", "coordinates": [2.1, 51.4]},
+        {"type": "Point", "coordinates": [-150.0, -30.0]},  # off the grid
+        _polygon(_INSIDE), _polygon(_PARTLY), _polygon(_OUTSIDE),
+        _polygon([[1.5, 51.5], [2.5, 51.5], [2.5, 52.2], [1.5, 51.5]]),
+    ]}
+    features = {"type": "FeatureCollection", "features": [
+        {"type": "Feature", "properties": {}, "geometry": g}
+        for g in collection["geometries"][:3]
+    ]}
+    cases = [  # (var, op, query, body, Spark start/end)
+        ("conc_tsm", "point", "lon=2.1&lat=51.4", None, {}),
+        ("conc_chl", "point", "lon=4.96&lat=50.01", None, {}),
+        ("conc_tsm", "point", "lon=-150&lat=-30", None, {}),
+        # inclusive at both ends, with and without a time of day
+        ("conc_tsm", "point",
+         "lon=2.1&lat=51.4&startDate=2017-01-25T09:35:51Z&endDate=2017-01-28",
+         None, {"start": "2017-01-25 09:35:51", "end": "2017-01-28 00:00:00"}),
+        ("kd489", "point",
+         "lon=2.1&lat=51.4&startDate=2017-01-16&endDate=2017-01-28T09:58:11",
+         None, {"start": "2017-01-16 00:00:00", "end": "2017-01-28 09:58:11"}),
+        ("conc_tsm", "geometry", "", _polygon(_INSIDE), {}),
+        ("conc_chl", "geometry", "", _polygon(_PARTLY), {}),
+        ("conc_chl", "geometry", "", _polygon(_OUTSIDE), {}),
+        ("kd489", "geometry", "", {"type": "Point", "coordinates": [2.1, 51.4]}, {}),
+        ("conc_tsm", "geometry", "startDate=2017-01-26", _polygon(_INSIDE),
+         {"start": "2017-01-26 00:00:00"}),
+        ("conc_chl", "geometries", "", collection, {}),
+        ("conc_tsm", "geometries", "endDate=2017-01-27", collection,
+         {"end": "2017-01-27 00:00:00"}),
+        ("kd489", "places", "", features, {}),
+    ]
+    for k, (var, op, query, body, bounds) in enumerate(cases):
+        rid = f"ts-parity-{k}"
+        status, got = _ts_request(f"{server}/ts/demo/{var}/{op}?{query}", body, rid)
+        assert status == 200, (k, got)
+        point = {}
+        if op == "point":
+            lon, lat = (float(kv.split("=")[1]) for kv in query.split("&")[:2])
+            point = {"lon": lon, "lat": lat}
+        _assert_same_answer(got, _spark_answer(cat, "demo", var, op, body, **bounds, **point))
+        assert _jobs(cat, rid) == [], (k, op, query)
+    # the all-NULL conc_tsm steps are rows with validCount 0, not gaps
+    status, got = _ts_request(f"{server}/ts/demo/conc_tsm/geometry", _polygon(_INSIDE))
+    assert [r["result"]["validCount"] for r in got["results"]][2:4] == [0, 0]
+    # a partly-outside polygon counts its in-grid mask only
+    assert 0 < got["results"][0]["result"]["totalCount"]
+
+
+def test_ts_inv_y_grid_matches_spark_plan(server, cube_server, spark, tmp_path):
+    """Ascending-latitude (inv_y) grids: the driver read finds the same
+    cells as the Spark plan."""
+    from xcube_server_spark.sources.cube_ingest import synth_noise_cube
+
+    cube, grid = synth_noise_cube(spark, width=32, height=16)
+    _, tg = write_cube(cube, grid, str(tmp_path / "noise"), tile_size=16)
+    cat = cube_server.catalog
+    cat.register_written_cube("noise", str(tmp_path / "noise"), grid, tg, ["noise"])
+    try:
+        poly = _polygon([[10.0, 20.0], [60.0, 25.0], [50.0, 70.0], [10.0, 20.0]])
+        for op, query, body, point in (
+            ("point", "lon=30&lat=45", None, {"lon": 30.0, "lat": 45.0}),
+            ("point", "lon=-100&lat=-80", None, {"lon": -100.0, "lat": -80.0}),
+            ("geometry", "", poly, {}),
+            ("geometries", "", {"geometries": [poly, {
+                "type": "Point", "coordinates": [30.0, 45.0]}]}, {}),
+        ):
+            status, got = _ts_request(f"{server}/ts/noise/noise/{op}?{query}", body, f"inv-y-{op}")
+            assert status == 200 and got["results"]
+            _assert_same_answer(got, _spark_answer(cat, "noise", "noise", op, body, **point))
+            assert _jobs(cat, f"inv-y-{op}") == []
+    finally:
+        del cat.datasets["noise"]
+
+
+def test_ts_spark_plan_answers_what_the_driver_read_declines(
+    server, cube_server, monkeypatch
+):
+    """A computed dataset, and a window over the driver read's row budget,
+    still run the route's Spark plan."""
+    from xcube_server_spark.cube import timeseries
+    from xcube_server_spark.cube.catalog import DatasetMeta
+
+    cat = cube_server.catalog
+    base = cat.datasets["demo"]
+    cat.register(DatasetMeta(
+        identifier="demo-1w-ts", title="weekly", base_path="", grid=base.grid,
+        tile_grid=base.tile_grid, variables=base.variables, computed=True,
+        function="resample_in_time", input_datasets=["demo"],
+        input_params={"period": "1W"},
+    ))
+    try:
+        status, got = _ts_request(
+            f"{server}/ts/demo-1w-ts/conc_chl/point?lon=2.1&lat=51.4", rid="ts-computed"
+        )
+        assert status == 200 and got["results"]
+        _assert_same_answer(got, _spark_answer(
+            cat, "demo-1w-ts", "conc_chl", "point", lon=2.1, lat=51.4))
+        assert _jobs(cat, "ts-computed")
+    finally:
+        del cat.datasets["demo-1w-ts"]
+    monkeypatch.setattr(timeseries, "WINDOW_ROW_BUDGET", 100)
+    for op, body in (
+        ("geometry", _polygon(_INSIDE)),
+        ("geometries", {"geometries": [_polygon(_INSIDE), _polygon(_PARTLY)]}),
+    ):
+        status, got = _ts_request(f"{server}/ts/demo/conc_chl/{op}", body, f"ts-budget-{op}")
+        assert status == 200
+        _assert_same_answer(got, _spark_answer(cat, "demo", "conc_chl", op, body))
+        assert _jobs(cat, f"ts-budget-{op}")
+    # a window within the budget still reads on the driver
+    status, _ = _ts_request(
+        f"{server}/ts/demo/conc_chl/point?lon=2.1&lat=51.4", rid="ts-budget-point"
+    )
+    assert status == 200 and _jobs(cat, "ts-budget-point") == []
+
+
+# -- request threads ---------------------------------------------------------
+
+
+def test_more_concurrent_requests_than_workers(server):
+    """Three times as many concurrent requests as request threads: the
+    surplus waits in the pool's queue and every request is answered."""
+    import concurrent.futures
+
+    from xcube_server_spark.server.app import REQUEST_THREADS
+
+    urls = [
+        f"{server}/ts/demo/kd489/point?lon={1 + 0.1 * k}&lat=51.2"
+        if k % 2 else f"{server}/datasets/demo/vars/kd489/tiles/1/{k % 2}/0.png"
+        for k in range(3 * REQUEST_THREADS)
+    ]
+    with concurrent.futures.ThreadPoolExecutor(max_workers=len(urls)) as ex:
+        statuses = [s for s, _, _ in ex.map(_get, urls)]
+    assert statuses == [200] * len(urls)
+
+
+def test_pooled_worker_tags_every_request(cube_server, monkeypatch):
+    """With one request thread, consecutive Spark-running requests still get
+    their own job group: the X-Request-Id header, else a fresh id, never the
+    previous request's. A client that connects and sends nothing holds the
+    worker for ``REQUEST_TIMEOUT_S`` only."""
+    import socket
+    import time
+
+    from xcube_server_spark.server import app
+
+    monkeypatch.setattr(app, "REQUEST_THREADS", 1)
+    monkeypatch.setattr(app, "REQUEST_TIMEOUT_S", 1)
+    srv = CubeServer(cube_server.catalog, places=cube_server.places)
+    srv.start()
+    try:
+        url = f"http://127.0.0.1:{srv.port}/places/pts?bbox=0,50,5,52.5"
+        for rid in ("pool-a", "pool-b"):
+            status, doc = _ts_request(url, rid=rid)
+            assert status == 200 and doc["features"]
+        a, b = _jobs(srv.catalog, "pool-a"), _jobs(srv.catalog, "pool-b")
+        assert a and b and not set(a) & set(b)
+        status, _ = _ts_request(url)
+        assert status == 200
+        assert _jobs(srv.catalog, "pool-b") == b
+        with socket.create_connection(("127.0.0.1", srv.port)):
+            t0 = time.monotonic()
+            status, _ = _ts_request(f"http://127.0.0.1:{srv.port}/datasets")
+            assert status == 200 and time.monotonic() - t0 < 30
+    finally:
+        srv.stop()
+        srv.httpd.server_close()
 
 
 def test_place_groups_endpoint(server):

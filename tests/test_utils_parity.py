@@ -60,6 +60,10 @@ def test_param_coercion():
     assert to_int("z", "7") == 7
     assert to_float("lon", "2.5") == 2.5
     assert to_datetime("d", "2017-01-16T10:09:22Z").hour == 10
+    # an offset is converted: the result is always naive UTC
+    assert to_datetime("d", "2017-01-16T12:09:22+02:00") == to_datetime(
+        "d", "2017-01-16T10:09:22Z"
+    )
     with pytest.raises(ValueError, match="'z' must be an integer"):
         to_int("z", "abc")
     assert coerce_dim_value("current", "datetime64[ns]") == "current"

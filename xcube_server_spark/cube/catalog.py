@@ -222,6 +222,52 @@ class CubeCatalog:
             target = join_store_path(meta.base_path, target)
         return target
 
+    def read_windows(
+        self,
+        identifier: str,
+        columns: list[str],
+        windows: list[tuple[tuple[int, int], tuple[int, int]]],
+        level: int = 0,
+        t_idx: int | None = None,
+    ) -> "pyarrow.Table | None":
+        """Driver-side pyarrow read of the rows in any of ``windows``: a
+        window ``((i0, i1), (j0, j1))`` holds the cells
+        ``i0 <= lat_idx < i1``, ``j0 <= lon_idx < j1``. Reads time step
+        ``t_idx``, or every step when it is None. Partition-dir pruning on
+        time_idx, then row-group predicate pruning on the indices.
+
+        This is the one local read of the serving path (tiles,
+        ``GetFeatureInfo``, time series). None when the level has no local
+        files to read (computed or object-store datasets): callers then
+        answer with a Spark plan."""
+        import pyarrow.dataset as pads
+
+        from ..sources.paths import local_part_glob
+
+        meta = self.datasets[identifier]
+        if meta.computed or not meta.base_path:
+            return None
+        # level_path follows a `.link` pointer, so grafted levels keep the
+        # driver read as long as the target is a local table.
+        step = "*" if t_idx is None else t_idx
+        parts = local_part_glob(
+            f"{self.level_path(identifier, level)}/time_idx={step}"
+        )
+        if not parts:
+            return None
+        f = pads.field
+        filt = None
+        for (i0, i1), (j0, j1) in windows:
+            box = (
+                (f("lat_idx") >= i0) & (f("lat_idx") < i1)
+                & (f("lon_idx") >= j0) & (f("lon_idx") < j1)
+            )
+            filt = box if filt is None else filt | box
+        source = os.path.dirname(parts[0]) if t_idx is None else parts[0]
+        return pads.dataset(source, format="parquet").to_table(
+            columns=columns, filter=filt
+        )
+
     def cube(self, identifier: str, level: int = 0) -> DataFrame:
         """DataFrame of one LOD level (P2 level projection,
         ``xcube_server/context.py:153-158``)."""

@@ -33,13 +33,16 @@ def to_float(name: str, value: str) -> float:
 
 
 def to_datetime(name: str, value: str) -> dt.datetime:
-    """ISO-8601 (date or datetime, optional trailing Z) → naive UTC datetime
-    (``xcube_server/reqparams.py:65-79``)."""
+    """ISO-8601 (date or datetime, optional trailing Z or UTC offset) →
+    naive UTC datetime (``xcube_server/reqparams.py:65-79``)."""
     try:
         v = value[:-1] if value.endswith("Z") else value
-        return dt.datetime.fromisoformat(v)
+        d = dt.datetime.fromisoformat(v)
     except (TypeError, ValueError):
         raise ValueError(f"{name!r} must be ISO date/datetime, was {value!r}") from None
+    if d.tzinfo is not None:
+        d = d.astimezone(dt.timezone.utc).replace(tzinfo=None)
+    return d
 
 
 def coerce_dim_value(value: str, dtype: str) -> Any:

@@ -153,9 +153,10 @@ class TileService:
     overhead, so repeated tile hits must not touch Spark at all.
 
     A miss reads its window where the dataset lives. A stored cube on a
-    local disk is read with pyarrow on the driver (one ``time_idx``
-    partition, row-group pruning on the cell indices) in milliseconds — the
-    latency class of the reference's in-process dask reads. A computed cube,
+    local disk is read with pyarrow on the driver
+    (``CubeCatalog.read_windows``: one ``time_idx`` partition, row-group
+    pruning on the cell indices) in milliseconds — the latency class of the
+    reference's in-process dask reads. A computed cube,
     or one in an object store, has no local files, and renders through the
     distributed ``render_tiles`` plan instead.
     """
@@ -181,38 +182,6 @@ class TileService:
             else None
         )
 
-    def _read_window(
-        self, ds_id: str, var: str, level: int, t_idx: int,
-        lat: tuple[int, int], lon: tuple[int, int],
-    ) -> "pyarrow.Table | None":
-        """pyarrow read of the cells ``lat[0] <= lat_idx < lat[1]``,
-        ``lon[0] <= lon_idx < lon[1]`` of one time step: partition-dir
-        pruning on time_idx + row-group predicate pruning on the indices.
-        None when the level has no local files to read (computed or
-        object-store datasets)."""
-        import pyarrow.dataset as pads
-
-        from ..sources.paths import local_part_glob
-
-        meta = self.catalog.datasets[ds_id]
-        if meta.computed or not meta.base_path:
-            return None
-        # level_path follows a `.link` pointer, so grafted levels keep the
-        # driver read as long as the target is a local table.
-        part_dir = f"{self.catalog.level_path(ds_id, level)}/time_idx={t_idx}"
-        if not local_part_glob(part_dir):
-            return None
-        f = pads.field
-        filt = (
-            (f("lat_idx") >= lat[0])
-            & (f("lat_idx") < lat[1])
-            & (f("lon_idx") >= lon[0])
-            & (f("lon_idx") < lon[1])
-        )
-        return pads.dataset(part_dir, format="parquet").to_table(
-            columns=["lat_idx", "lon_idx", var], filter=filt
-        )
-
     def _read_tile_fast(
         self, ds_id: str, var: str, z: int, x: int, y: int, t_idx: int
     ) -> "pd.DataFrame | None":
@@ -231,7 +200,9 @@ class TileService:
         else:
             lat = (y * tg.tile_height, (y + 1) * tg.tile_height)
         lon = (x * tg.tile_width, (x + 1) * tg.tile_width)
-        table = self._read_window(ds_id, var, level, t_idx, lat, lon)
+        table = self.catalog.read_windows(
+            ds_id, ["lat_idx", "lon_idx", var], [(lat, lon)], level, t_idx
+        )
         if table is None:
             return None
         pdf = table.to_pandas()
@@ -397,8 +368,9 @@ class TileService:
     ) -> float | None:
         """One-cell read: the driver window read narrowed to one cell, else
         the level's Spark frame (computed or object-store datasets)."""
-        table = self._read_window(
-            ds_id, var, level, t_idx, (lat_idx, lat_idx + 1), (col, col + 1)
+        table = self.catalog.read_windows(
+            ds_id, [var], [((lat_idx, lat_idx + 1), (col, col + 1))], level,
+            t_idx,
         )
         if table is not None:
             values = table.column(var).to_pylist()

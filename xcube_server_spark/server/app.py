@@ -24,10 +24,20 @@ Routes (reference handler in parens):
 - ``GET /places/{collection}/{ds}``                   (dataset-bounds filter)
 
 Threading model: the reference moves work off the event loop into executor
-threads (``xcube_server/handlers.py:165`` etc.); here ``ThreadingHTTPServer``
-gives one thread per request and Spark's scheduler multiplexes jobs — set
-``spark.scheduler.mode=FAIR`` for a production deployment so tile latency
-isn't starved by long analytics queries.
+threads (``xcube_server/handlers.py:165`` etc.). Here a fixed pool of
+``REQUEST_THREADS`` worker threads answers the connections; more concurrent
+requests wait in the pool's queue. A worker lives across requests, so it
+keeps its py4j connection (and JVM thread) instead of opening one per
+request, and it also keeps Spark's thread-local properties: ``_route``
+therefore sets the scheduler pool and the job group (the ``X-Request-Id``
+header, or a generated id) on every request, so each Spark job is tagged
+with the request that launched it. Spark's scheduler multiplexes the jobs —
+set ``spark.scheduler.mode=FAIR`` for a production deployment so tile
+latency isn't starved by long analytics queries.
+
+Tiles and time series of a stored cube with local files are answered by a
+driver-side pyarrow read without a Spark job; computed and object-store
+cubes, places and oversized time-series windows run Spark plans.
 """
 
 from __future__ import annotations
@@ -36,6 +46,8 @@ import json
 import sys
 import threading
 import traceback
+import uuid
+from concurrent.futures import ThreadPoolExecutor
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
@@ -52,9 +64,12 @@ from ..cube.metadata import (
     get_time_series_info,
 )
 from ..cube.places import find_places
-from ..cube.reqparams import parse_query_geometry, to_float, to_int
+from ..cube.reqparams import parse_query_geometry, to_datetime, to_float, to_int
 from ..cube.tiles import TileService
 from ..cube.timeseries import (
+    local_series_for_geometry,
+    local_series_for_geometry_collection,
+    local_series_for_point,
     time_series_for_geometry,
     time_series_for_geometry_collection,
     time_series_for_point,
@@ -65,6 +80,8 @@ from .wmts import get_wmts_capabilities_xml, parse_kvp
 
 
 MAX_BODY_BYTES = 16 * 1024 * 1024  # largest JSON request body accepted
+REQUEST_THREADS = 8  # worker threads answering requests
+REQUEST_TIMEOUT_S = 60  # longest a stalled client socket holds a worker
 
 
 class PayloadTooLarge(Exception):
@@ -106,14 +123,41 @@ def _ts_result(r) -> dict:
     }
 
 
-def _ts_rows(df: DataFrame | None) -> dict:
-    if df is None:
-        return {"results": []}
-    return {"results": [_ts_result(r) for r in df.collect()]}
+def _ts_rows(rows) -> dict:
+    return {"results": [_ts_result(r) for r in rows]}
+
+
+def _collect(df: DataFrame | None) -> list:
+    return [] if df is None else df.collect()
+
+
+def _time_bound(q, name: str) -> str | None:
+    """``startDate``/``endDate`` as one normalized UTC timestamp string for
+    both time-series paths. It stays a string so that Spark's
+    ``to_timestamp`` reads it in the session time zone (UTC), whatever the
+    process ``TZ``."""
+    if name not in q:
+        return None
+    return to_datetime(name, q[name]).isoformat(sep=" ")
+
+
+class _PooledHTTPServer(ThreadingHTTPServer):
+    """``ThreadingHTTPServer`` with a fixed pool of ``REQUEST_THREADS``
+    worker threads instead of a new thread per connection."""
+
+    def __init__(self, address, handler):
+        super().__init__(address, handler)
+        self.pool = ThreadPoolExecutor(
+            REQUEST_THREADS, thread_name_prefix="cube-request"
+        )
+
+    def process_request(self, request, client_address):
+        self.pool.submit(self.process_request_thread, request, client_address)
 
 
 class CubeServer:
-    """Wraps a catalog + tile service in a threading HTTP server."""
+    """Wraps a catalog + tile service in an HTTP server with a fixed pool of
+    request threads."""
 
     def __init__(
         self,
@@ -131,6 +175,8 @@ class CubeServer:
         outer = self
 
         class Handler(BaseHTTPRequestHandler):
+            timeout = REQUEST_TIMEOUT_S
+
             def log_message(self, *a):  # quiet
                 pass
 
@@ -166,7 +212,7 @@ class CubeServer:
             def do_POST(self):
                 self._handle("POST")
 
-        self.httpd = ThreadingHTTPServer((host, port), Handler)
+        self.httpd = _PooledHTTPServer((host, port), Handler)
         self.port = self.httpd.server_address[1]
         self._thread: threading.Thread | None = None
 
@@ -199,10 +245,13 @@ class CubeServer:
         url = urlparse(h.path)
         q = _Params((k, v[0]) for k, v in parse_qs(url.query).items())
         parts = [p for p in url.path.split("/") if p]
-        # request threads are per-request, so the thread-local pool property
-        # never leaks across requests
-        self.catalog.spark.sparkContext.setLocalProperty(
-            "spark.scheduler.pool", self._pool_for(parts)
+        # pooled request threads keep Spark's thread-local properties from
+        # one request to the next: set both on every request
+        sc = self.catalog.spark.sparkContext
+        sc.setLocalProperty("spark.scheduler.pool", self._pool_for(parts))
+        sc.setJobGroup(
+            h.headers.get("X-Request-Id") or uuid.uuid4().hex,
+            f"{method} {url.path}",
         )
 
         if method == "GET" and not parts:
@@ -380,49 +429,8 @@ class CubeServer:
             h._json(list_cmaps())
         elif method == "GET" and parts == ["ts"]:
             h._json(get_time_series_info(self.catalog))
-        elif method == "POST" and len(parts) == 4 and parts[0] == "ts" and parts[3] in ("geometries", "places"):
-            # geometry-collection / feature-collection fan-out (U2): one job
-            body = _read_json(h) or {}
-            if parts[3] == "geometries":
-                geoms = body.get("geometries", [])
-            else:
-                geoms = [
-                    f["geometry"] for f in body.get("features", []) if f.get("geometry")
-                ]
-            df = time_series_for_geometry_collection(
-                self.catalog,
-                parts[1],
-                parts[2],
-                geometries=geoms,
-                start=q.get("startDate"),
-                end=q.get("endDate"),
-            )
-            results = [[] for _ in geoms]
-            for r in df.collect():
-                results[r["geometry_id"]].append(_ts_result(r))
-            h._json({"results": [{"results": rs} for rs in results]})
-        elif method == "GET" and len(parts) == 4 and parts[0] == "ts" and parts[3] == "point":
-            df = time_series_for_point(
-                self.catalog,
-                parts[1],
-                parts[2],
-                lon=to_float("lon", q["lon"]),
-                lat=to_float("lat", q["lat"]),
-                start=q.get("startDate"),
-                end=q.get("endDate"),
-            )
-            h._json(_ts_rows(df))
-        elif method == "POST" and len(parts) == 4 and parts[0] == "ts" and parts[3] == "geometry":
-            geom = parse_query_geometry(body=_read_json(h) or {})
-            df = time_series_for_geometry(
-                self.catalog,
-                parts[1],
-                parts[2],
-                geometry=geom,
-                start=q.get("startDate"),
-                end=q.get("endDate"),
-            )
-            h._json(_ts_rows(df))
+        elif method in ("GET", "POST") and len(parts) == 4 and parts[0] == "ts":
+            h._json(self._time_series(h, method, parts[1], parts[2], parts[3], q))
         elif method == "GET" and parts == ["places"]:
             # place-group inventory (xcube_server/context.py:297-303)
             if self._live_places() is None:
@@ -493,6 +501,50 @@ class CubeServer:
         else:
             raise KeyError(url.path)
 
+    def _time_series(self, h, method: str, ds: str, var: str, op: str, q) -> dict:
+        """``/ts/{ds}/{var}/{op}``: the driver read's answer, else the rows
+        of the Spark plan (``cube/timeseries.py``)."""
+        ts = dict(
+            start=_time_bound(q, "startDate"), end=_time_bound(q, "endDate")
+        )
+        if method == "GET" and op == "point":
+            lon, lat = to_float("lon", q["lon"]), to_float("lat", q["lat"])
+            rows = local_series_for_point(self.catalog, ds, var, lon, lat, **ts)
+            if rows is None:
+                rows = _collect(time_series_for_point(
+                    self.catalog, ds, var, lon=lon, lat=lat, **ts
+                ))
+            return _ts_rows(rows)
+        if method == "POST" and op == "geometry":
+            geom = parse_query_geometry(body=_read_json(h) or {})
+            rows = local_series_for_geometry(self.catalog, ds, var, geom, **ts)
+            if rows is None:
+                rows = _collect(time_series_for_geometry(
+                    self.catalog, ds, var, geometry=geom, **ts
+                ))
+            return _ts_rows(rows)
+        if method == "POST" and op in ("geometries", "places"):
+            # geometry-collection / feature-collection fan-out (U2)
+            body = _read_json(h) or {}
+            if op == "geometries":
+                geoms = body.get("geometries", [])
+            else:
+                geoms = [
+                    f["geometry"] for f in body.get("features", []) if f.get("geometry")
+                ]
+            per_geom = local_series_for_geometry_collection(
+                self.catalog, ds, var, geoms, **ts
+            )
+            if per_geom is None:
+                # one job for all members, rows grouped by geometry_id
+                per_geom = [[] for _ in geoms]
+                for r in time_series_for_geometry_collection(
+                    self.catalog, ds, var, geometries=geoms, **ts
+                ).collect():
+                    per_geom[r["geometry_id"]].append(r)
+            return {"results": [_ts_rows(rows) for rows in per_geom]}
+        raise KeyError(f"/ts/{ds}/{var}/{op}")
+
     # -- lifecycle -----------------------------------------------------------
 
     def start(self) -> int:
@@ -504,3 +556,4 @@ class CubeServer:
         self.httpd.shutdown()
         if self._thread:
             self._thread.join(timeout=5)
+        self.httpd.pool.shutdown()

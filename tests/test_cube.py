@@ -343,49 +343,6 @@ def test_tile_service_cache_and_transparency(demo_catalog):
     assert rgba_nan[..., 3].max() == 0
 
 
-def test_file_cache_spill_and_reload(demo_catalog, tmp_path, monkeypatch):
-    """Disk tier: tiles rendered by one TileService instance are served from
-    the file cache by a fresh instance (process-restart analog) without
-    touching the render path at all."""
-    from xcube_server_spark.cube import tiles as tiles_mod
-
-    cache_dir = str(tmp_path / "image-cache")
-    svc_a = TileService(demo_catalog, file_cache_path=cache_dir)
-    png = svc_a.get_tile("demo", "conc_tsm", 0, 0, 0, time="current")
-    assert len(svc_a._file_cache) == 1
-
-    svc_b = TileService(demo_catalog, file_cache_path=cache_dir)
-
-    def boom(*a, **k):
-        raise AssertionError("render path must not run on a file-cache hit")
-
-    monkeypatch.setattr(svc_b, "_read_tile_fast", boom)
-    monkeypatch.setattr(tiles_mod, "render_tiles", boom)
-    again = svc_b.get_tile("demo", "conc_tsm", 0, 0, 0, time="current")
-    assert again == png
-    # promoted to the memory tier on hit
-    assert len(svc_b._cache) == 1
-    # default-off parity (xcube_server/defaults.py:43): no path → no tier
-    assert TileService(demo_catalog)._file_cache is None
-
-
-def test_file_cache_eviction_oldest_first(tmp_path):
-    import time
-
-    from xcube_server_spark.cube.cache import FileByteCache
-
-    fc = FileByteCache(str(tmp_path / "fc"), capacity=1000)
-    fc.put("a", b"x" * 300)
-    time.sleep(0.02)
-    fc.put("b", b"y" * 300)
-    time.sleep(0.02)
-    assert fc.get("a") == b"x" * 300  # refresh a's mtime: b becomes oldest
-    time.sleep(0.02)
-    fc.put("c", b"z" * 300)  # 900 bytes > 0.75*1000 → evict oldest (b)
-    assert fc.get("b") is None
-    assert fc.get("a") is not None and fc.get("c") is not None
-
-
 def test_tile_window_filter_prunes(demo_catalog):
     """The per-tile scan must filter on the tile window (index range), so
     parquet row-group stats can prune — assert the filter reaches the scan."""
@@ -552,18 +509,20 @@ def test_tile_fast_path_matches_spark_path(demo_catalog):
 
 
 def test_batched_point_timeseries_matches_single(demo_catalog):
-    """N probes in ONE broadcast-join job must equal N single-point queries."""
-    from xcube_server_spark.cube.timeseries import time_series_for_points
-
+    """N point members of ONE fan-out job must equal N single-point
+    queries."""
     pts = [(2.1, 51.4), (1.2, 50.6), (-150.0, -30.0)]  # last one outside
-    batched = time_series_for_points(demo_catalog, "demo", "conc_tsm", pts)
+    geoms = [{"type": "Point", "coordinates": list(p)} for p in pts]
+    batched = time_series_for_geometry_collection(
+        demo_catalog, "demo", "conc_tsm", geoms
+    )
     rows = batched.collect()
-    assert {r["point_id"] for r in rows} == {0, 1}  # outside point dropped
+    assert {r["geometry_id"] for r in rows} == {0, 1}  # outside point dropped
     for pid, (lon, lat) in [(0, pts[0]), (1, pts[1])]:
         single = time_series_for_point(
             demo_catalog, "demo", "conc_tsm", lon, lat
         ).collect()
-        mine = [r for r in rows if r["point_id"] == pid]
+        mine = [r for r in rows if r["geometry_id"] == pid]
         assert [
             (r["date"], r["total_count"], r["valid_count"], r["average"])
             for r in mine

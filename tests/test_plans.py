@@ -50,6 +50,56 @@ def test_mask_semi_join_is_broadcast(spark, sf_dir):
     assert count_exchanges(out) == 0
 
 
+def test_series_plan_prunes_to_mask_window_and_broadcasts_mask(spark, tmp_path):
+    """J1/A1: every time-series route's Spark plan pushes the index box of
+    its mask cells into the parquet scan (a point's box is its one cell),
+    broadcasts the mask, and moves nothing of the cube side through an
+    exchange: the only shuffles are the per-step aggregate and the sort."""
+    import re
+
+    from xcube_server_spark.cube.catalog import CubeCatalog
+    from xcube_server_spark.cube.rasterize import rasterize_mask
+    from xcube_server_spark.cube.timeseries import (
+        time_series_for_geometry,
+        time_series_for_geometry_collection,
+        time_series_for_point,
+    )
+    from xcube_server_spark.plans.explain import executed_plan
+    from xcube_server_spark.sources.cube_ingest import synth_demo_cube, write_cube
+
+    base = str(tmp_path / "demo")
+    cube, grid = synth_demo_cube(spark, width=64, height=32)
+    _, tg = write_cube(cube, grid, base, tile_size=32)
+    cat = CubeCatalog(spark)
+    cat.register_written_cube("demo", base, grid, tg, ["conc_tsm"])
+    poly = {"type": "Polygon", "coordinates": [
+        [[1.0, 51.0], [2.0, 51.0], [2.0, 52.0], [1.0, 52.0], [1.0, 51.0]]]}
+    cells = rasterize_mask(poly, grid)
+    i, j = grid.lat_idx_of(51.4), grid.lon_idx_of(2.1)
+    (i0, j0), (i1, j1) = cells.min(axis=0), cells.max(axis=0)
+    point = {"type": "Point", "coordinates": [2.1, 51.4]}
+    for df, (lo_i, hi_i, lo_j, hi_j) in (
+        (time_series_for_point(cat, "demo", "conc_tsm", 2.1, 51.4), (i, i, j, j)),
+        (time_series_for_geometry(cat, "demo", "conc_tsm", poly), (i0, i1, j0, j1)),
+        (
+            time_series_for_geometry_collection(cat, "demo", "conc_tsm", [poly, point]),
+            (min(i0, i), max(i1, i), min(j0, j), max(j1, j)),
+        ),
+    ):
+        pf = ",".join(pushed_filters(df))
+        for f in (
+            f"GreaterThanOrEqual(lat_idx,{lo_i})", f"LessThanOrEqual(lat_idx,{hi_i})",
+            f"GreaterThanOrEqual(lon_idx,{lo_j})", f"LessThanOrEqual(lon_idx,{hi_j})",
+        ):
+            assert f in pf, (f, pf)
+        plan = executed_plan(df)
+        join = plan[plan.index("BroadcastHashJoin"):]
+        # the join's subtree: the cube scan and the broadcast mask, no shuffle
+        assert "BuildRight" in join and "BroadcastExchange" in join, plan
+        assert not re.search(r"Exchange (?!HashedRelation)", join), plan
+        assert count_exchanges(df) == 2, plan
+
+
 def test_stride_decimation_no_shuffle(spark, sf_dir):
     """A5 'first'/stride decimation is filter+project only — zero exchanges."""
     from xcube_server_spark.operators.pyramid import decimate

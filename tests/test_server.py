@@ -196,6 +196,37 @@ def test_errors(server, cube_server, monkeypatch, capsys):
     # unknown dataset / variable stay 404
     status, _ = _get_json(f"{server}/ts/nope/conc_chl/point?lon=2&lat=51")
     assert status == 404
+    # an unknown variable is a 404 before any read, for a stored and a
+    # computed dataset alike, and the message holds no reader internals
+    from xcube_server_spark.cube.catalog import DatasetMeta
+
+    cat = cube_server.catalog
+    base = cat.datasets["demo"]
+    cat.register(DatasetMeta(
+        identifier="demo-1w-err", title="weekly", base_path="", grid=base.grid,
+        tile_grid=base.tile_grid, variables=base.variables, computed=True,
+        function="resample_in_time", input_datasets=["demo"],
+        input_params={"period": "1W"},
+    ))
+    geometry = _polygon(_INSIDE)
+    try:
+        for ds in ("demo", "demo-1w-err"):
+            for url, body in (
+                (f"/ts/{ds}/nope/point?lon=2&lat=51", None),
+                (f"/ts/{ds}/nope/geometry", geometry),
+                (f"/ts/{ds}/nope/geometries", {"geometries": [geometry]}),
+                (f"/ts/{ds}/nope/places", {"features": [
+                    {"type": "Feature", "properties": {}, "geometry": geometry}]}),
+                (f"/datasets/{ds}/vars/nope/tiles/0/0/0.png", None),
+                (f"/wmts/kvp?Service=WMTS&Request=GetFeatureInfo&Layer={ds}.nope"
+                 "&TileMatrix=0&TileCol=0&TileRow=0&I=0&J=0", None),
+            ):
+                status, doc = _ts_request(f"{server}{url}", body)
+                assert status == 404, (url, doc)
+                assert "'nope'" in doc["error"]["message"], (url, doc)
+                assert "FieldRef" not in doc["error"]["message"], (url, doc)
+    finally:
+        del cat.datasets["demo-1w-err"]
     # a malformed time-series date bound is a 400 naming it
     for name in ("startDate", "endDate"):
         status, doc = _get_json(

@@ -88,6 +88,11 @@ class DatasetMeta:
     place_group_refs: list[str] = field(default_factory=list)
     property_mapping: dict = field(default_factory=dict)
 
+    def require_variable(self, var: str) -> None:
+        """KeyError (an HTTP 404) when the dataset has no variable ``var``."""
+        if var not in self.variables:
+            raise KeyError(f"variable {var!r} of dataset {self.identifier!r}")
+
 
 class CubeCatalog:
     def __init__(self, spark: SparkSession):
@@ -305,11 +310,6 @@ class CubeCatalog:
                 r["time"].strftime("%Y-%m-%d %H:%M:%S") for r in rows
             ]
         return self._times_cache[identifier]
-
-    def cube_for_zoom(self, identifier: str, z: int) -> tuple[DataFrame, int]:
-        meta = self.datasets[identifier]
-        level = meta.tile_grid.level_for_zoom(z)
-        return self.cube(identifier, level), level
 
     def coords(self, identifier: str, dim: str) -> DataFrame:
         meta = self.datasets[identifier]

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from ..functions.colormap import DEFAULT_CMAP, apply_cmap
 from ..sources.png import encode_rgba_png
-from .cache import ByteCache, FileByteCache
+from .cache import ByteCache
 from .catalog import CubeCatalog, StyleMeta
 
 
@@ -166,21 +166,12 @@ class TileService:
         catalog: CubeCatalog,
         capacity: int = 512 * 1024 * 1024,
         trace_perf: bool = False,
-        file_cache_path: str | None = None,
-        file_cache_capacity: int = 20 * 1000**3,
     ):
         self.catalog = catalog
         self.capacity = capacity
         # --traceperf parity (xcube_server/cli.py:58-59, perf.py:33-52)
         self.trace_perf = trace_perf
         self._cache = ByteCache(capacity)
-        # optional second-level disk tier, default OFF with a 20 GB cap —
-        # parity with xcube_server/defaults.py:42-46
-        self._file_cache = (
-            FileByteCache(file_cache_path, file_cache_capacity)
-            if file_cache_path
-            else None
-        )
 
     def _read_tile_fast(
         self, ds_id: str, var: str, z: int, x: int, y: int, t_idx: int
@@ -262,11 +253,7 @@ class TileService:
         cached = self._cache.get(key)
         if cached is not None:
             return cached
-        if self._file_cache is not None:
-            spilled = self._file_cache.get(key)
-            if spilled is not None:
-                self._cache.put(key, spilled)  # promote to memory tier
-                return spilled
+        meta.require_variable(var)
         tg = meta.tile_grid
         t_idx, _ = _nearest_time(self.catalog.times(ds_id), time)
         pdf = self._read_tile_fast(ds_id, var, z, x, y, t_idx)
@@ -292,8 +279,6 @@ class TileService:
                     apply_cmap(blank, *st.value_range, st.color_bar)
                 )
         self._cache.put(key, png)
-        if self._file_cache is not None:
-            self._file_cache.put(key, png)
         return png
 
     def get_feature_info(
@@ -324,6 +309,7 @@ class TileService:
         from .grid import level_sizes
 
         meta = self.catalog.datasets[ds_id]
+        meta.require_variable(var)
         tg = meta.tile_grid
         if not 0 <= z < tg.num_levels:
             raise ValueError(

@@ -6,7 +6,9 @@ Reference entry points:
 - geometry TS: ``_get_time_series_for_geometry`` — ``:148-205``
 - collection fan-out: ``:208-219``
 
-Two ways to answer, with the same rows:
+Every route is one list of cell masks (a point's nearest cell, P5; a
+polygon's all-touched mask, J1; one mask per fan-out member, U2) answered
+per step as ``{totalCount, validCount, average}`` (A1/A2), two ways:
 
 - **Driver read** (``local_series_for_*``): for a stored cube with local
   files, one pyarrow read of each mask's bounding window over every
@@ -16,21 +18,18 @@ Two ways to answer, with the same rows:
   declines (returns None) for computed cubes, object-store cubes and
   windows over ``WINDOW_ROW_BUDGET`` rows, which bounds a request's driver
   memory.
-- **Spark plans** (``time_series_for_*``): everything the driver read
-  declines. They are also the reference the driver read is tested against,
-  and what the query registry runs.
-  - point: nearest grid index computed on the driver from grid metadata
-    (P5 as index arithmetic — no window function, no shuffle), equality
-    filter pushed into the parquet scan, groupBy('time') over ≤|timesteps|
-    rows.
-  - geometry: driver rasterizes the mask over the clipped window (J1), mask
-    is broadcast, ``left_semi`` join + groupBy('time'). The only shuffle
-    has |timesteps| cardinality regardless of cube size.
+- **Spark plan** (``time_series_for_*``, all one ``_series_plan``): what
+  the driver read declines; also the reference it is tested against and
+  what the query registry runs. The scan is filtered to the index box of
+  all mask cells, a ``between`` on ``lat_idx``/``lon_idx`` pushed into
+  parquet (for a point a one-cell box, pruning row groups as an equality
+  would); the mask is broadcast and joined, so the cube side never
+  shuffles; the one shuffle is ``masked_mean_per_step``'s aggregate.
 
 Both give a row only for steps with stored rows, in time order, dated as
-``iso_ts`` prints them; ``total_count`` is the mask size for a polygon and
-the rows found for a point or a fan-out member; ``startDate``/``endDate``
-are inclusive.
+``iso_ts`` prints them; ``total_count`` is the mask size on the
+``/geometry`` route and the rows found on the point and fan-out routes;
+``startDate``/``endDate`` are inclusive.
 
 Known reference inconsistency (SURVEY.md §7.3-2): the reference's polygon
 ``average`` is computed over the *bbox* subset while ``validCount`` counts
@@ -49,6 +48,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from ..functions.scalars import iso_ts
+from ..operators.timeseries import masked_mean_per_step
 from .catalog import CubeCatalog
 from .grid import GridMeta
 from .rasterize import Geometry, geometry_bbox, rasterize_mask
@@ -71,8 +71,10 @@ def _point_cells(grid: GridMeta, lon: float, lat: float) -> np.ndarray:
 
 
 def _geometry_cells(grid: GridMeta, geometry: Geometry) -> np.ndarray:
-    """All-touched mask of a non-point geometry; none, without rasterizing,
-    when its bbox misses the grid (P4)."""
+    """A geometry's mask: a point's cell, else the all-touched mask; none,
+    without rasterizing, when the bbox misses the grid (P4)."""
+    if geometry["type"] == "Point":
+        return _point_cells(grid, *geometry["coordinates"][:2])
     west, south, east, north = geometry_bbox(geometry)
     gw, gs, ge, gn = grid.extent
     if east < gw or west > ge or north < gs or south > gn:
@@ -80,147 +82,7 @@ def _geometry_cells(grid: GridMeta, geometry: Geometry) -> np.ndarray:
     return rasterize_mask(geometry, grid)
 
 
-def _member_cells(grid: GridMeta, geometries: list[Geometry]) -> list[np.ndarray]:
-    """Cells of each fan-out member: a point's cell, or a polygon's mask."""
-    out = []
-    for geom in geometries:
-        if geom["type"] == "Point":
-            x, y = geom["coordinates"][:2]
-            out.append(_point_cells(grid, x, y))
-        else:
-            out.append(rasterize_mask(geom, grid))
-    return out
-
-
-def _ts_agg(df: DataFrame, var: str, total_count=None) -> DataFrame:
-    """A1/A2 shape: {time, totalCount, validCount, average} per step."""
-    total = total_count if total_count is not None else F.count(F.lit(1))
-    return (
-        df.groupBy("time")
-        .agg(
-            total.alias("total_count"),
-            F.count(var).alias("valid_count"),
-            F.avg(var).alias("average"),
-        )
-        .orderBy("time")
-        .select(
-            iso_ts(F.col("time")).alias("date"),
-            "total_count",
-            "valid_count",
-            "average",
-        )
-    )
-
-
-def time_series_for_point(
-    catalog: CubeCatalog,
-    ds_id: str,
-    var: str,
-    lon: float,
-    lat: float,
-    start: str | None = None,
-    end: str | None = None,
-) -> DataFrame | None:
-    """Point TS: P5 nearest-index select + P3 time slice + A2 aggregate.
-
-    Returns None when the point is outside the dataset (P7 short-circuit,
-    ``time_series.py:126-128``) — the API layer maps that to
-    ``{'results': []}``.
-    """
-    cells = _point_cells(catalog.datasets[ds_id].grid, lon, lat)
-    if len(cells) == 0:
-        return None
-    i, j = cells[0].tolist()
-    df = catalog.cube(ds_id).filter(
-        (F.col("lat_idx") == i) & (F.col("lon_idx") == j)
-    )
-    if start is not None:
-        df = df.filter(F.col("time") >= F.to_timestamp(F.lit(start)))
-    if end is not None:
-        df = df.filter(F.col("time") <= F.to_timestamp(F.lit(end)))
-    return _ts_agg(df.select("time", var), var)
-
-
-def time_series_for_geometry(
-    catalog: CubeCatalog,
-    ds_id: str,
-    var: str,
-    geometry: Geometry,
-    start: str | None = None,
-    end: str | None = None,
-) -> DataFrame | None:
-    """Geometry TS: bbox clip (P4) + rasterized mask semi-join (J1) + A1.
-
-    The mask DataFrame carries only (lat_idx, lon_idx) — thousands of rows —
-    and is broadcast: the cube side never shuffles.
-    """
-    if geometry["type"] == "Point":
-        x, y = geometry["coordinates"][:2]
-        return time_series_for_point(catalog, ds_id, var, x, y, start, end)
-    cells = _geometry_cells(catalog.datasets[ds_id].grid, geometry)
-    if len(cells) == 0:
-        return None
-    total_count = int(len(cells))  # A6 mask cardinality (mask_df.count())
-    mask_df = catalog.spark.createDataFrame(
-        [(int(a), int(b)) for a, b in cells], "lat_idx int, lon_idx int"
-    )
-    df = catalog.cube(ds_id).join(
-        broadcast(mask_df), ["lat_idx", "lon_idx"], "left_semi"
-    )
-    if start is not None:
-        df = df.filter(F.col("time") >= F.to_timestamp(F.lit(start)))
-    if end is not None:
-        df = df.filter(F.col("time") <= F.to_timestamp(F.lit(end)))
-    return _ts_agg(df.select("time", var), var, total_count=F.lit(total_count))
-
-
-def time_series_for_geometry_collection(
-    catalog: CubeCatalog,
-    ds_id: str,
-    var: str,
-    geometries: list[Geometry],
-    start: str | None = None,
-    end: str | None = None,
-) -> DataFrame:
-    """U2 fan-out as ONE job: union all masks tagged with geometry_id and
-    group by (geometry_id, time) — instead of the reference's sequential
-    per-geometry loop (``time_series.py:208-219``)."""
-    rows = [
-        (gi, int(a), int(b))
-        for gi, cells in enumerate(
-            _member_cells(catalog.datasets[ds_id].grid, geometries)
-        )
-        for a, b in cells
-    ]
-    mask_df = catalog.spark.createDataFrame(
-        rows, "geometry_id int, lat_idx int, lon_idx int"
-    )
-    df = catalog.cube(ds_id).join(
-        broadcast(mask_df), ["lat_idx", "lon_idx"], "inner"
-    )
-    if start is not None:
-        df = df.filter(F.col("time") >= F.to_timestamp(F.lit(start)))
-    if end is not None:
-        df = df.filter(F.col("time") <= F.to_timestamp(F.lit(end)))
-    return (
-        df.groupBy("geometry_id", "time")
-        .agg(
-            F.count(F.lit(1)).alias("total_count"),
-            F.count(var).alias("valid_count"),
-            F.avg(var).alias("average"),
-        )
-        .orderBy("geometry_id", "time")
-        .select(
-            "geometry_id",
-            iso_ts(F.col("time")).alias("date"),
-            "total_count",
-            "valid_count",
-            "average",
-        )
-    )
-
-
-# -- driver read -----------------------------------------------------------
+# -- the two plans over a list of cell masks ------------------------------
 
 
 def _micros(value: str) -> int:
@@ -306,6 +168,109 @@ def _window_series(
     return out
 
 
+def _series_plan(
+    catalog: CubeCatalog,
+    ds_id: str,
+    var: str,
+    masks: list[np.ndarray],
+    start: str | None,
+    end: str | None,
+) -> DataFrame:
+    """``_window_series``' rows as one Spark plan: ``{geometry_id, date,
+    total_count, valid_count, average}`` per mask and step, ``total_count``
+    being the rows found, ordered by mask and time."""
+    cells = np.concatenate([_NO_CELLS, *masks])
+    # an empty box when no mask has cells
+    (i0, j0), (i1, j1) = (
+        cells.min(axis=0, initial=np.iinfo(np.int32).max),
+        cells.max(axis=0, initial=-1),
+    )
+    mask_df = catalog.spark.createDataFrame(
+        [(gi, int(a), int(b)) for gi, m in enumerate(masks) for a, b in m],
+        "geometry_id int, lat_idx int, lon_idx int",
+    )
+    df = catalog.cube(ds_id).filter(
+        F.col("lat_idx").between(int(i0), int(i1))
+        & F.col("lon_idx").between(int(j0), int(j1))
+    ).join(broadcast(mask_df), ["lat_idx", "lon_idx"])
+    if start is not None:
+        df = df.filter(F.col("time") >= F.to_timestamp(F.lit(start)))
+    if end is not None:
+        df = df.filter(F.col("time") <= F.to_timestamp(F.lit(end)))
+    return (
+        masked_mean_per_step(df, "time", var, ["geometry_id"])
+        .orderBy("geometry_id", "time")
+        .select(
+            "geometry_id",
+            iso_ts(F.col("time")).alias("date"),
+            "total_count",
+            "valid_count",
+            "average",
+        )
+    )
+
+
+# -- routes ----------------------------------------------------------------
+
+
+def time_series_for_point(
+    catalog: CubeCatalog,
+    ds_id: str,
+    var: str,
+    lon: float,
+    lat: float,
+    start: str | None = None,
+    end: str | None = None,
+) -> DataFrame | None:
+    """Point TS: the nearest cell's rows per step (P5 + P3 + A2).
+
+    Returns None when the point is outside the dataset (P7 short-circuit,
+    ``time_series.py:126-128``) — the API layer maps that to
+    ``{'results': []}``.
+    """
+    cells = _point_cells(catalog.datasets[ds_id].grid, lon, lat)
+    if len(cells) == 0:
+        return None
+    plan = _series_plan(catalog, ds_id, var, [cells], start, end)
+    return plan.drop("geometry_id")
+
+
+def time_series_for_geometry(
+    catalog: CubeCatalog,
+    ds_id: str,
+    var: str,
+    geometry: Geometry,
+    start: str | None = None,
+    end: str | None = None,
+) -> DataFrame | None:
+    """Geometry TS: rasterized mask (J1) + A1, ``total_count`` being the
+    mask size (A6); None when the geometry misses the grid."""
+    cells = _geometry_cells(catalog.datasets[ds_id].grid, geometry)
+    if len(cells) == 0:
+        return None
+    return (
+        _series_plan(catalog, ds_id, var, [cells], start, end)
+        .drop("geometry_id")
+        .withColumn("total_count", F.lit(len(cells)))
+    )
+
+
+def time_series_for_geometry_collection(
+    catalog: CubeCatalog,
+    ds_id: str,
+    var: str,
+    geometries: list[Geometry],
+    start: str | None = None,
+    end: str | None = None,
+) -> DataFrame:
+    """U2 fan-out as ONE job, rows tagged with the member's ``geometry_id``
+    — instead of the reference's sequential per-geometry loop
+    (``time_series.py:208-219``)."""
+    grid = catalog.datasets[ds_id].grid
+    masks = [_geometry_cells(grid, g) for g in geometries]
+    return _series_plan(catalog, ds_id, var, masks, start, end)
+
+
 def local_series_for_point(
     catalog: CubeCatalog,
     ds_id: str,
@@ -332,9 +297,6 @@ def local_series_for_geometry(
 ) -> list[dict] | None:
     """``time_series_for_geometry``'s rows from a driver read; None when
     the Spark plan must answer."""
-    if geometry["type"] == "Point":
-        x, y = geometry["coordinates"][:2]
-        return local_series_for_point(catalog, ds_id, var, x, y, start, end)
     cells = _geometry_cells(catalog.datasets[ds_id].grid, geometry)
     rows = _window_series(catalog, ds_id, var, [cells], start, end)
     if rows is None:
@@ -354,54 +316,6 @@ def local_series_for_geometry_collection(
 ) -> list[list[dict]] | None:
     """``time_series_for_geometry_collection``'s rows, one list per
     geometry, from a driver read; None when the Spark plan must answer."""
-    masks = _member_cells(catalog.datasets[ds_id].grid, geometries)
+    grid = catalog.datasets[ds_id].grid
+    masks = [_geometry_cells(grid, g) for g in geometries]
     return _window_series(catalog, ds_id, var, masks, start, end)
-
-
-def time_series_for_points(
-    catalog: CubeCatalog,
-    ds_id: str,
-    var: str,
-    points: list[tuple[float, float]],
-    start: str | None = None,
-    end: str | None = None,
-) -> DataFrame:
-    """Batched point probes — J3's "many points × cube" generalization
-    (SURVEY.md §2.3): N nearest-cell lookups become ONE broadcast equi-join
-    on rounded indices instead of N sequential jobs. Out-of-grid points are
-    dropped (P7 per probe).
-
-    Output: one row per (point_id, time) with the A2 stats shape.
-    """
-    meta = catalog.datasets[ds_id]
-    probes = [
-        (pid, meta.grid.lat_idx_of(lat), meta.grid.lon_idx_of(lon))
-        for pid, (lon, lat) in enumerate(points)
-        if meta.grid.contains(lon, lat)
-    ]
-    probe_df = catalog.spark.createDataFrame(
-        probes, "point_id int, lat_idx int, lon_idx int"
-    )
-    df = catalog.cube(ds_id).join(
-        broadcast(probe_df), ["lat_idx", "lon_idx"], "inner"
-    )
-    if start is not None:
-        df = df.filter(F.col("time") >= F.to_timestamp(F.lit(start)))
-    if end is not None:
-        df = df.filter(F.col("time") <= F.to_timestamp(F.lit(end)))
-    return (
-        df.groupBy("point_id", "time")
-        .agg(
-            F.count(F.lit(1)).alias("total_count"),
-            F.count(var).alias("valid_count"),
-            F.avg(var).alias("average"),
-        )
-        .orderBy("point_id", "time")
-        .select(
-            "point_id",
-            iso_ts(F.col("time")).alias("date"),
-            "total_count",
-            "valid_count",
-            "average",
-        )
-    )

@@ -1,4 +1,4 @@
-"""Time-series statistics (SURVEY.md §2.4 A1/A2/A3/A6).
+"""Time-series statistics (SURVEY.md §2.4 A1/A2).
 
 Reference semantics (``xcube_server/controllers/time_series.py:121-203``):
 for each time step over a masked region emit
@@ -29,14 +29,4 @@ def masked_mean_per_step(
         F.count(F.lit(1)).alias("total_count"),
         F.count(v).alias("valid_count"),
         F.avg(v).alias("average"),
-    )
-
-
-def global_minmax(df: DataFrame, value_col: str) -> DataFrame:
-    """A3 — NULL-skipping global min/max (auto color-range,
-    ``xcube_server/controllers/tiles.py:83-84``)."""
-    return df.agg(
-        F.min(value_col).alias("vmin"),
-        F.max(value_col).alias("vmax"),
-        F.count(value_col).alias("valid_count"),
     )

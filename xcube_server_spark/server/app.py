@@ -504,6 +504,7 @@ class CubeServer:
     def _time_series(self, h, method: str, ds: str, var: str, op: str, q) -> dict:
         """``/ts/{ds}/{var}/{op}``: the driver read's answer, else the rows
         of the Spark plan (``cube/timeseries.py``)."""
+        self.catalog.datasets[ds].require_variable(var)
         ts = dict(
             start=_time_bound(q, "startDate"), end=_time_bound(q, "endDate")
         )

@@ -343,16 +343,6 @@ def test_tile_service_cache_and_transparency(demo_catalog):
     assert rgba_nan[..., 3].max() == 0
 
 
-def test_tile_window_filter_prunes(demo_catalog):
-    """The per-tile scan must filter on the tile window (index range), so
-    parquet row-group stats can prune — assert the filter reaches the scan."""
-    tg = demo_catalog.datasets["demo"].tile_grid
-    z = tg.num_levels - 1
-    df = render_tiles(demo_catalog, "demo", "conc_chl", z, tiles=[(0, 0)])
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters" in plan or "Filter" in plan
-
-
 # -- computed cube (weekly resample) ----------------------------------------
 
 
@@ -593,6 +583,54 @@ def test_inv_y_cube_orientation(spark, tmp_path):
     # fast path agrees with the Spark path on flipped grids too
     fast = TileService(cat)
     assert fast.get_tile("noise", "noise", tg.num_levels - 1, 0, 0) == png
+
+
+def test_feature_info_inv_y_coarser_zoom(spark, tmp_path):
+    """GetFeatureInfo on an ascending-lat (inv_y) cube below native zoom:
+    lon/lat are the centre of that level's cell, and the value is the cell
+    under the tile pixel, for the driver read and the Spark read of a
+    computed dataset alike."""
+    from xcube_server_spark.cube.catalog import DatasetMeta
+    from xcube_server_spark.sources.cube_ingest import synth_noise_cube
+
+    base = str(tmp_path / "noise")
+    cube, grid = synth_noise_cube(spark, width=64, height=32)
+    _, tg = write_cube(cube, grid, base, tile_size=16)
+    cat = CubeCatalog(spark)
+    cat.register_written_cube("noise", base, grid, tg, ["noise"])
+    cat.register(DatasetMeta(
+        identifier="noise-1w", title="weekly", base_path="", grid=grid,
+        tile_grid=tg, variables=["noise"], computed=True,
+        function="resample_in_time", input_datasets=["noise"],
+        input_params={"period": "1W"},
+    ))
+    svc = TileService(cat)
+    z = tg.num_levels - 2  # one level below native: 32x16 cells
+    level = tg.level_for_zoom(z)
+    assert level == 1
+    x, y, i, j = 1, 0, 5, 3
+    col, disp_row = 16 * x + i, 16 * y + j
+    lat_idx = 15 - disp_row  # row 0 of the display is the level's top row
+    pdf = svc._read_tile_fast("noise", "noise", z, x, y, 0)
+    (under_pixel,) = pdf.loc[
+        (pdf["disp_row"] == disp_row) & (pdf["lon_idx"] == col), "noise"
+    ]
+    for ds in ("noise", "noise-1w"):
+        info = svc.get_feature_info(ds, "noise", z, x, y, i, j)
+        assert info["lon"] == -180.0 + (col + 0.5) * (360.0 / 32)
+        assert info["lat"] == -90.0 + (lat_idx + 0.5) * (180.0 / 16)
+        (expected,) = (
+            cat.cube(ds, level)
+            .filter(
+                (F.col("time_idx") == 0)
+                & (F.col("lat_idx") == lat_idx)
+                & (F.col("lon_idx") == col)
+            )
+            .select("noise")
+            .first()
+        )
+        assert info["value"] == pytest.approx(expected, abs=1e-6), ds
+        assert info["value"] == pytest.approx(float(under_pixel), abs=1e-6), ds
 
 
 def test_computed_cube_time_axis_and_tiles(spark, demo_catalog):

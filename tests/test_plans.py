@@ -38,18 +38,6 @@ def test_small_dims_broadcast(spark, sf_dir):
     assert has_broadcast_join(df)
 
 
-def test_mask_semi_join_is_broadcast(spark, sf_dir):
-    """J1: the mask side of the semi-join must broadcast (the cube side must
-    never shuffle for a geometry query)."""
-    from xcube_server_spark.operators.spatial import mask_semi_join
-
-    cube = load_table(spark, sf_dir, "lineitem")
-    mask = spark.createDataFrame([(1, 1)], "l_orderkey long, l_linenumber int")
-    out = mask_semi_join(cube, mask, ["l_orderkey", "l_linenumber"])
-    assert has_broadcast_join(out)
-    assert count_exchanges(out) == 0
-
-
 def test_series_plan_prunes_to_mask_window_and_broadcasts_mask(spark, tmp_path):
     """J1/A1: every time-series route's Spark plan pushes the index box of
     its mask cells into the parquet scan (a point's box is its one cell),
@@ -98,6 +86,54 @@ def test_series_plan_prunes_to_mask_window_and_broadcasts_mask(spark, tmp_path):
         assert "BuildRight" in join and "BroadcastExchange" in join, plan
         assert not re.search(r"Exchange (?!HashedRelation)", join), plan
         assert count_exchanges(df) == 2, plan
+
+
+def test_render_tiles_pushes_tile_window_into_scan(spark, tmp_path):
+    """T1/T2: ``render_tiles(tiles=[(x, y)])`` filters the tile's index
+    window with ``between`` bounds that reach the parquet scan's
+    ``PushedFilters`` (row-group pruning): on a north-up and an ``inv_y``
+    stored cube, and for a computed weekly cube in its input scan, through
+    the transform's aggregate."""
+    from xcube_server_spark.cube.catalog import CubeCatalog, DatasetMeta
+    from xcube_server_spark.cube.tiles import render_tiles
+    from xcube_server_spark.sources.cube_ingest import (
+        synth_demo_cube,
+        synth_noise_cube,
+        write_cube,
+    )
+
+    cat = CubeCatalog(spark)
+    for name, (cube, grid), var in (
+        ("demo", synth_demo_cube(spark, width=64, height=32), "conc_tsm"),
+        ("noise", synth_noise_cube(spark, width=64, height=32), "noise"),
+    ):
+        _, tg = write_cube(cube, grid, str(tmp_path / name), tile_size=16)
+        cat.register_written_cube(name, str(tmp_path / name), grid, tg, [var])
+    demo = cat.datasets["demo"]
+    cat.register(DatasetMeta(
+        identifier="demo-1w", title="weekly", base_path="", grid=demo.grid,
+        tile_grid=demo.tile_grid, variables=demo.variables, computed=True,
+        function="resample_in_time", input_datasets=["demo"],
+        input_params={"period": "1W"},
+    ))
+    # 64x32 cells in 16-px tiles: three levels, z=2 native (32 rows), z=1
+    # 32x16 cells (16 rows); on the inv_y grid display row r is storage
+    # row (rows - 1 - r)
+    for ds, var, z, (x, y), (lo_i, hi_i) in (
+        ("demo", "conc_tsm", 2, (1, 0), (0, 15)),
+        ("noise", "noise", 2, (3, 1), (0, 15)),
+        ("noise", "noise", 2, (0, 0), (16, 31)),
+        ("demo-1w", "conc_tsm", 1, (1, 0), (0, 15)),
+    ):
+        df = render_tiles(cat, ds, var, z, tiles=[(x, y)])
+        pf = ",".join(pushed_filters(df))
+        for f in (
+            f"GreaterThanOrEqual(lat_idx,{lo_i})",
+            f"LessThanOrEqual(lat_idx,{hi_i})",
+            f"GreaterThanOrEqual(lon_idx,{16 * x})",
+            f"LessThanOrEqual(lon_idx,{16 * x + 15})",
+        ):
+            assert f in pf, (ds, z, x, y, f, pf)
 
 
 def test_stride_decimation_no_shuffle(spark, sf_dir):

@@ -218,6 +218,8 @@ def test_errors(server, cube_server, monkeypatch, capsys):
                 (f"/ts/{ds}/nope/places", {"features": [
                     {"type": "Feature", "properties": {}, "geometry": geometry}]}),
                 (f"/datasets/{ds}/vars/nope/tiles/0/0/0.png", None),
+                (f"/datasets/{ds}/vars/nope/legend.png", None),
+                (f"/datasets/{ds}/vars/nope/tilegrid", None),
                 (f"/wmts/kvp?Service=WMTS&Request=GetFeatureInfo&Layer={ds}.nope"
                  "&TileMatrix=0&TileCol=0&TileRow=0&I=0&J=0", None),
             ):

@@ -20,10 +20,11 @@ import json
 import os
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from ..sources.paths import join_store_path, open_store_text
-from .grid import GridMeta, TileGridMeta
+from .grid import GridMeta, IndexWindow, TileGridMeta
 
 _RAW_SUFFIXES = (".zarr", ".levels", ".nc", ".nc4", ".h5", ".hdf5", ".tif", ".tiff")
 
@@ -92,6 +93,21 @@ class DatasetMeta:
         """KeyError (an HTTP 404) when the dataset has no variable ``var``."""
         if var not in self.variables:
             raise KeyError(f"variable {var!r} of dataset {self.identifier!r}")
+
+
+def window_filter(windows: list[IndexWindow]) -> Column:
+    """The cells in any of ``windows`` as a Spark filter: the twin of
+    ``CubeCatalog.read_windows``' pyarrow filter. ``between`` bounds reach
+    the parquet scan's ``PushedFilters`` (row-group pruning), also through
+    a computed cube's aggregate on the cell indices."""
+    filt = None
+    for (i0, i1), (j0, j1) in windows:
+        box = (
+            F.col("lat_idx").between(i0, i1 - 1)
+            & F.col("lon_idx").between(j0, j1 - 1)
+        )
+        filt = box if filt is None else filt | box
+    return filt
 
 
 class CubeCatalog:
@@ -231,7 +247,7 @@ class CubeCatalog:
         self,
         identifier: str,
         columns: list[str],
-        windows: list[tuple[tuple[int, int], tuple[int, int]]],
+        windows: list[IndexWindow],
         level: int = 0,
         t_idx: int | None = None,
     ) -> "pyarrow.Table | None":

@@ -17,7 +17,10 @@ reference's ``pow2_2d_subdivision`` optimal-subdivision search
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
+
+# cells i0 <= lat_idx < i1, j0 <= lon_idx < j1 as ((i0, i1), (j0, j1))
+IndexWindow = tuple[tuple[int, int], tuple[int, int]]
 
 
 def level_sizes(width: int, height: int, num_levels: int) -> list[tuple[int, int]]:
@@ -197,11 +200,37 @@ class GridMeta:
             i = int(math.floor((self.extent[3] - lat) / self.res_lat))
         return min(max(i, 0), self.height - 1)
 
+    def level(self, k: int) -> "GridMeta":
+        """LOD level ``k``'s grid: the ``level_sizes`` halving applied ``k``
+        times over the same extent and orientation."""
+        width, height = level_sizes(self.width, self.height, k + 1)[k]
+        return replace(self, width=width, height=height)
+
+    def display_rows(self, rows):
+        """Storage rows (``lat_idx``) as display rows (row 0 = north), for
+        an int, a numpy/pandas array or a Spark ``Column``. The ``inv_y``
+        flip undoes itself, so the same call maps display rows back."""
+        return (self.height - 1) - rows if self.inv_y else rows
+
     def contains(self, lon: float, lat: float) -> bool:
         """P7 containment pre-filter
         (``xcube_server/controllers/time_series.py:126-128``)."""
         west, south, east, north = self.extent
         return west <= lon <= east and south <= lat <= north
+
+
+def tile_window(
+    grid: GridMeta, tile_grid: TileGridMeta, z: int, x: int, y: int
+) -> tuple[int, IndexWindow]:
+    """Tile (z, x, y) as its LOD level and the storage index window
+    ``((i0, i1), (j0, j1))`` of its cells (half-open, the form
+    ``CubeCatalog.read_windows`` takes). Tile rows count display rows, so
+    on an ``inv_y`` grid the window's lat rows are flipped."""
+    level = tile_grid.level_for_zoom(z)
+    tw, th = tile_grid.tile_width, tile_grid.tile_height
+    lg = grid.level(level)
+    i0, i1 = sorted((lg.display_rows(y * th), lg.display_rows((y + 1) * th - 1)))
+    return level, ((i0, i1 + 1), (x * tw, (x + 1) * tw))
 
 
 def morton_interleave_expr(lat_col: str = "lat_idx", lon_col: str = "lon_idx",

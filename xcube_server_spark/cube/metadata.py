@@ -81,6 +81,32 @@ def get_coordinates(catalog: CubeCatalog, ds_id: str, dim: str) -> dict[str, Any
     return {"name": dim, "size": len(vals), "dtype": dtype, "coordinates": vals}
 
 
+def ol4_tile_source(
+    url: str,
+    extent: tuple[float, float, float, float],
+    num_levels: int,
+    num_level_zero_tiles_x: int,
+    tile_width: int,
+    tile_height: int,
+) -> dict[str, Any]:
+    """OpenLayers 4 XYZ tile-source options for a pyramid whose level-zero
+    tiles span ``extent`` (``xcube_server/controllers/tiles.py:226-251``)."""
+    west, south, east, north = extent
+    res0 = (east - west) / (num_level_zero_tiles_x * tile_width)
+    return {
+        "url": url,
+        "projection": "EPSG:4326",
+        "minZoom": 0,
+        "maxZoom": num_levels - 1,
+        "tileGrid": {
+            "extent": [west, south, east, north],
+            "origin": [west, north],
+            "resolutions": [res0 / (1 << z) for z in range(num_levels)],
+            "tileSize": [tile_width, tile_height],
+        },
+    }
+
+
 def get_tile_grid(
     catalog: CubeCatalog, ds_id: str, client: str | None = None,
     base_url: str = "", var: str = "",
@@ -96,19 +122,10 @@ def get_tile_grid(
         "/tiles/{z}/{x}/{y}.png"
     )
     if client == "ol4":
-        res0 = (east - west) / (tg.num_level_zero_tiles_x * tg.tile_width)
-        return {
-            "url": url,
-            "projection": "EPSG:4326",
-            "minZoom": 0,
-            "maxZoom": tg.num_levels - 1,
-            "tileGrid": {
-                "extent": [west, south, east, north],
-                "origin": [west, north],
-                "resolutions": [res0 / (1 << z) for z in range(tg.num_levels)],
-                "tileSize": [tg.tile_width, tg.tile_height],
-            },
-        }
+        return ol4_tile_source(
+            url, tg.geo_extent, tg.num_levels, tg.num_level_zero_tiles_x,
+            tg.tile_width, tg.tile_height,
+        )
     if client == "cesium":
         return {
             "url": url,

@@ -5,8 +5,9 @@ Reference pipeline per tile: slice window → mask → clip/normalize → colorm
 ``xcube_server/im/tiledimage.py:514-635``). Spark plan:
 
 1. driver: zoom → LOD level (P2), nearest time slice (P6) from catalog
-   metadata, tile (x, y) → index window;
-2. executors: window filter (pushed to parquet row-group pruning) →
+   metadata, tile (x, y) → storage index window (``grid.tile_window``);
+2. executors: window filter (``catalog.window_filter``, pushed to parquet
+   row-group pruning) →
    ``applyInPandas`` render — ONE fused Python stage per tile, the moral
    equivalent of the reference's fused numba kernel (T5), emitting PNG bytes
    (S9, pure-python encoder);
@@ -29,7 +30,8 @@ from pyspark.sql import functions as F
 from ..functions.colormap import DEFAULT_CMAP, apply_cmap
 from ..sources.png import encode_rgba_png
 from .cache import ByteCache
-from .catalog import CubeCatalog, StyleMeta
+from .catalog import CubeCatalog, StyleMeta, window_filter
+from .grid import tile_window
 
 
 def _nearest_time(times: list[str], probe: str | None) -> tuple[int, str]:
@@ -116,28 +118,17 @@ def render_tiles(
     st = style or meta.styles.get(var) or StyleMeta()
     vmin, vmax = st.value_range
 
-    df = cube.filter(F.col("time_idx") == t_idx).select(
-        "lat_idx", "lon_idx", var
-    )
+    df = cube.filter(F.col("time_idx") == t_idx)
+    if tiles is not None:
+        df = df.filter(window_filter(
+            [tile_window(meta.grid, tg, z, x, y)[1] for x, y in tiles]
+        ))
     tw, th = tg.tile_width, tg.tile_height
-    from .grid import level_sizes
-
-    h_level = level_sizes(meta.grid.width, meta.grid.height, tg.num_levels)[level][1]
-    disp = (
-        (F.lit(h_level - 1) - F.col("lat_idx"))
-        if meta.grid.inv_y
-        else F.col("lat_idx")
-    )
-    df = df.withColumn("disp_row", disp)
+    disp = meta.grid.level(level).display_rows(F.col("lat_idx"))
+    df = df.select("lat_idx", "lon_idx", var, disp.alias("disp_row"))
     df = df.withColumn("tile_y", (F.col("disp_row") / th).cast("int")).withColumn(
         "tile_x", (F.col("lon_idx") / tw).cast("int")
     )
-    if tiles is not None:
-        pred = None
-        for tx, ty in tiles:
-            this = (F.col("tile_x") == tx) & (F.col("tile_y") == ty)
-            pred = this if pred is None else (pred | this)
-        df = df.filter(pred)
     return df.groupBy("tile_y", "tile_x").applyInPandas(
         _render_pdf_factory(tw, th, vmin, vmax, st.color_bar, var),
         "tile_y int, tile_x int, png binary, rgba_sum long",
@@ -178,29 +169,15 @@ class TileService:
     ) -> "pd.DataFrame | None":
         """Driver read of one tile window, with ``disp_row`` in display
         space; None when the dataset must render through Spark."""
-        from .grid import level_sizes
-
         meta = self.catalog.datasets[ds_id]
-        tg = meta.tile_grid
-        level = tg.level_for_zoom(z)
-        h_level = level_sizes(meta.grid.width, meta.grid.height, tg.num_levels)[level][1]
-        # display rows [y*th, (y+1)*th) -> storage lat_idx range (flipped
-        # for inv_y grids)
-        if meta.grid.inv_y:
-            lat = (h_level - (y + 1) * tg.tile_height, h_level - y * tg.tile_height)
-        else:
-            lat = (y * tg.tile_height, (y + 1) * tg.tile_height)
-        lon = (x * tg.tile_width, (x + 1) * tg.tile_width)
+        level, window = tile_window(meta.grid, meta.tile_grid, z, x, y)
         table = self.catalog.read_windows(
-            ds_id, ["lat_idx", "lon_idx", var], [(lat, lon)], level, t_idx
+            ds_id, ["lat_idx", "lon_idx", var], [window], level, t_idx
         )
         if table is None:
             return None
         pdf = table.to_pandas()
-        if meta.grid.inv_y:
-            pdf["disp_row"] = (h_level - 1) - pdf["lat_idx"]
-        else:
-            pdf["disp_row"] = pdf["lat_idx"]
+        pdf["disp_row"] = meta.grid.level(level).display_rows(pdf["lat_idx"])
         return pdf
 
     def get_tile(
@@ -220,66 +197,48 @@ class TileService:
         with measure_time(
             f"tile {ds_id}/{var}/{z}/{x}/{y}", trace=self.trace_perf
         ):
-            return self._get_tile(
-                ds_id, var, z, x, y, time=time, cmap=cmap, vmin=vmin, vmax=vmax
+            meta = self.catalog.datasets[ds_id]
+            tg = meta.tile_grid
+            if not 0 <= z < tg.num_levels:
+                raise ValueError(f"zoom {z} out of range [0, {tg.num_levels - 1}]")
+            st = meta.styles.get(var) or StyleMeta(color_bar=DEFAULT_CMAP)
+            st = StyleMeta(
+                color_bar=cmap or st.color_bar,
+                value_range=(
+                    st.value_range[0] if vmin is None else vmin,
+                    st.value_range[1] if vmax is None else vmax,
+                ),
             )
-
-    def _get_tile(
-        self,
-        ds_id: str,
-        var: str,
-        z: int,
-        x: int,
-        y: int,
-        time: str | None = None,
-        cmap: str | None = None,
-        vmin: float | None = None,
-        vmax: float | None = None,
-    ) -> bytes:
-        meta = self.catalog.datasets[ds_id]
-        if not 0 <= z < meta.tile_grid.num_levels:
-            raise ValueError(
-                f"zoom {z} out of range [0, {meta.tile_grid.num_levels - 1}]"
-            )
-        st = meta.styles.get(var) or StyleMeta(color_bar=DEFAULT_CMAP)
-        st = StyleMeta(
-            color_bar=cmap or st.color_bar,
-            value_range=(
-                st.value_range[0] if vmin is None else vmin,
-                st.value_range[1] if vmax is None else vmax,
-            ),
-        )
-        key = (ds_id, var, z, x, y, time, st.color_bar, st.value_range)
-        cached = self._cache.get(key)
-        if cached is not None:
-            return cached
-        meta.require_variable(var)
-        tg = meta.tile_grid
-        t_idx, _ = _nearest_time(self.catalog.times(ds_id), time)
-        pdf = self._read_tile_fast(ds_id, var, z, x, y, t_idx)
-        if pdf is not None:
-            render = _render_pdf_factory(
-                tg.tile_width, tg.tile_height, *st.value_range,
-                st.color_bar, var,
-            )
-            png = bytes(render((y, x), pdf)["png"][0])
-        else:
-            rows = render_tiles(
-                self.catalog, ds_id, var, z, time=time, style=st,
-                tiles=[(x, y)],
-            ).collect()
-            if rows:
-                png = bytes(rows[0]["png"])
-            else:
-                # Out-of-range tile: all-NaN → fully transparent (the
-                # reference still renders padded tiles,
-                # test/controllers/test_tiles.py:18).
-                blank = np.full((tg.tile_height, tg.tile_width), np.nan)
-                png = encode_rgba_png(
-                    apply_cmap(blank, *st.value_range, st.color_bar)
+            key = (ds_id, var, z, x, y, time, st.color_bar, st.value_range)
+            cached = self._cache.get(key)
+            if cached is not None:
+                return cached
+            meta.require_variable(var)
+            t_idx, _ = _nearest_time(self.catalog.times(ds_id), time)
+            pdf = self._read_tile_fast(ds_id, var, z, x, y, t_idx)
+            if pdf is not None:
+                render = _render_pdf_factory(
+                    tg.tile_width, tg.tile_height, *st.value_range,
+                    st.color_bar, var,
                 )
-        self._cache.put(key, png)
-        return png
+                png = bytes(render((y, x), pdf)["png"][0])
+            else:
+                rows = render_tiles(
+                    self.catalog, ds_id, var, z, time=time, style=st,
+                    tiles=[(x, y)],
+                ).collect()
+                if rows:
+                    png = bytes(rows[0]["png"])
+                else:
+                    # Out-of-range tile: all-NaN → fully transparent (the
+                    # reference still renders padded tiles,
+                    # test/controllers/test_tiles.py:18).
+                    blank = np.full((tg.tile_height, tg.tile_width), np.nan)
+                    png = encode_rgba_png(
+                        apply_cmap(blank, *st.value_range, st.color_bar)
+                    )
+            self._cache.put(key, png)
+            return png
 
     def get_feature_info(
         self,
@@ -299,14 +258,13 @@ class TileService:
         ``query_expr`` does (P11).
 
         Pixel → cell is pure index arithmetic on the level grid (display
-        row flips for ``inv_y`` grids exactly as the tile render does);
-        the value read is the tile's window read narrowed to ONE cell, with
-        the same Spark read for computed or object-store datasets. NaN/absent cells report ``value: None``
-        (the reference's masked-pixel contract).
+        rows flip for ``inv_y`` grids exactly as the tile render's do), and
+        lon/lat are that level cell's centre. The value read is the tile's
+        window read narrowed to ONE cell, with the same Spark filter for
+        computed or object-store datasets. NaN/absent cells report
+        ``value: None`` (the reference's masked-pixel contract).
         """
         import math
-
-        from .grid import level_sizes
 
         meta = self.catalog.datasets[ds_id]
         meta.require_variable(var)
@@ -318,33 +276,20 @@ class TileService:
         if not (0 <= i < tg.tile_width and 0 <= j < tg.tile_height):
             raise ValueError(f"pixel ({i}, {j}) outside the tile")
         level = tg.level_for_zoom(z)
-        w_level, h_level = level_sizes(
-            meta.grid.width, meta.grid.height, tg.num_levels
-        )[level]
+        lg = meta.grid.level(level)
         col = x * tg.tile_width + i
-        disp_row = y * tg.tile_height + j
-        lat_idx = (h_level - 1) - disp_row if meta.grid.inv_y else disp_row
+        lat_idx = lg.display_rows(y * tg.tile_height + j)
         t_idx, t_label = _nearest_time(self.catalog.times(ds_id), time)
         value = None
-        in_grid = 0 <= col < w_level and 0 <= lat_idx < h_level
-        if in_grid:
+        if 0 <= col < lg.width and 0 <= lat_idx < lg.height:
             value = self._read_cell(ds_id, var, level, lat_idx, col, t_idx)
-        west, south, east, north = meta.grid.extent
-        res_lon = (east - west) / w_level
-        res_lat = (north - south) / h_level
-        lon = west + (col + 0.5) * res_lon
-        lat = (
-            south + (lat_idx + 0.5) * res_lat
-            if meta.grid.inv_y
-            else north - (lat_idx + 0.5) * res_lat
-        )
         if value is not None and isinstance(value, float) and math.isnan(value):
             value = None
         return {
             "layer": f"{ds_id}.{var}",
             "time": t_label,
-            "lon": lon,
-            "lat": lat,
+            "lon": lg.lon_of(col),
+            "lat": lg.lat_of(lat_idx),
             "value": value,
         }
 
@@ -354,21 +299,15 @@ class TileService:
     ) -> float | None:
         """One-cell read: the driver window read narrowed to one cell, else
         the level's Spark frame (computed or object-store datasets)."""
-        table = self.catalog.read_windows(
-            ds_id, [var], [((lat_idx, lat_idx + 1), (col, col + 1))], level,
-            t_idx,
-        )
+        window = ((lat_idx, lat_idx + 1), (col, col + 1))
+        table = self.catalog.read_windows(ds_id, [var], [window], level, t_idx)
         if table is not None:
             values = table.column(var).to_pylist()
         else:
             values = [
                 r[0]
                 for r in self.catalog.cube(ds_id, level)
-                .filter(
-                    (F.col("time_idx") == t_idx)
-                    & (F.col("lat_idx") == lat_idx)
-                    & (F.col("lon_idx") == col)
-                )
+                .filter((F.col("time_idx") == t_idx) & window_filter([window]))
                 .select(var)
                 .collect()
             ]

@@ -49,8 +49,8 @@ from pyspark.sql.functions import broadcast
 
 from ..functions.scalars import iso_ts
 from ..operators.timeseries import masked_mean_per_step
-from .catalog import CubeCatalog
-from .grid import GridMeta
+from .catalog import CubeCatalog, window_filter
+from .grid import GridMeta, IndexWindow
 from .rasterize import Geometry, geometry_bbox, rasterize_mask
 from .reqparams import to_datetime
 
@@ -85,6 +85,16 @@ def _geometry_cells(grid: GridMeta, geometry: Geometry) -> np.ndarray:
 # -- the two plans over a list of cell masks ------------------------------
 
 
+def _box(cells: np.ndarray) -> IndexWindow:
+    """The index window enclosing ``cells``; an empty one when there are
+    none."""
+    (i0, j0), (i1, j1) = (
+        cells.min(axis=0, initial=np.iinfo(np.int32).max),
+        cells.max(axis=0, initial=-1),
+    )
+    return (int(i0), int(i1) + 1), (int(j0), int(j1) + 1)
+
+
 def _micros(value: str) -> int:
     """A ``startDate``/``endDate`` bound in epoch microseconds (UTC)."""
     return int(np.datetime64(to_datetime("date", value), "us").astype(np.int64))
@@ -108,11 +118,7 @@ def _window_series(
     driver read of the masks' bounding windows over every step of level 0,
     ``total_count`` being the rows found. None when the driver read
     declines: no local files, or more than ``WINDOW_ROW_BUDGET`` rows."""
-    windows = [
-        ((int(m[:, 0].min()), int(m[:, 0].max()) + 1),
-         (int(m[:, 1].min()), int(m[:, 1].max()) + 1))
-        for m in masks if len(m)
-    ]
+    windows = [_box(m) for m in masks if len(m)]
     if not windows:
         return [[] for _ in masks]
     steps = max(1, len(catalog.datasets[ds_id].grid.times))
@@ -179,20 +185,14 @@ def _series_plan(
     """``_window_series``' rows as one Spark plan: ``{geometry_id, date,
     total_count, valid_count, average}`` per mask and step, ``total_count``
     being the rows found, ordered by mask and time."""
-    cells = np.concatenate([_NO_CELLS, *masks])
-    # an empty box when no mask has cells
-    (i0, j0), (i1, j1) = (
-        cells.min(axis=0, initial=np.iinfo(np.int32).max),
-        cells.max(axis=0, initial=-1),
-    )
     mask_df = catalog.spark.createDataFrame(
         [(gi, int(a), int(b)) for gi, m in enumerate(masks) for a, b in m],
         "geometry_id int, lat_idx int, lon_idx int",
     )
-    df = catalog.cube(ds_id).filter(
-        F.col("lat_idx").between(int(i0), int(i1))
-        & F.col("lon_idx").between(int(j0), int(j1))
-    ).join(broadcast(mask_df), ["lat_idx", "lon_idx"])
+    box = _box(np.concatenate([_NO_CELLS, *masks]))
+    df = catalog.cube(ds_id).filter(window_filter([box])).join(
+        broadcast(mask_df), ["lat_idx", "lon_idx"]
+    )
     if start is not None:
         df = df.filter(F.col("time") >= F.to_timestamp(F.lit(start)))
     if end is not None:

@@ -1,4 +1,4 @@
-from .nearest import asof_join, nearest_select
+from .nearest import asof_join
 from .pyramid import decimate
 from .resample import resample_weekly_mean
 from .spatial import antimeridian_pred, bbox_filter
@@ -6,7 +6,6 @@ from .timeseries import masked_mean_per_step
 
 __all__ = [
     "asof_join",
-    "nearest_select",
     "decimate",
     "resample_weekly_mean",
     "antimeridian_pred",

@@ -1,43 +1,18 @@
-"""Nearest-neighbor selection and as-of joins (SURVEY.md §2.2 P5/P6, §2.3 J3).
+"""As-of joins (SURVEY.md §2.3 J3).
 
 The reference's ``sel(method='nearest')`` picks, per probe value, the row
 whose coordinate is closest (``xcube_server/controllers/time_series.py:130``,
-``xcube_server/controllers/tiles.py:77``). Generalized over Spark:
-
-- one probe value → window-rank over |delta| (tiny partition, no shuffle when
-  pre-filtered);
-- many probes / streaming → the scalable *as-of join*: union probes into the
-  event stream, sort per key, carry the last observed value forward with
-  ``last(..., ignorenulls=True)``. One shuffle on the join key, no N×M blowup.
+``xcube_server/controllers/tiles.py:77``). On a cube grid that is index
+arithmetic (``GridMeta.lat_idx_of``/``lon_idx_of``); for many probes or a
+stream the scalable form is the *as-of join*: union probes into the event
+stream, sort per key, carry the last observed value forward with
+``last(..., ignorenulls=True)``. One shuffle on the join key, no N×M blowup.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def nearest_select(
-    df: DataFrame,
-    coord: Column,
-    probe,
-    partition_cols: list[str] | None = None,
-    tiebreak: list[str] | None = None,
-) -> DataFrame:
-    """Per partition, keep the single row whose ``coord`` is nearest ``probe``.
-
-    Tie-breaking: xarray's ``method='nearest'`` resolves ties toward the
-    lower coordinate; we order by (|delta| asc, coord asc, *tiebreak) which
-    reproduces that for sorted coordinates.
-    """
-    delta = F.abs(coord.cast("double") - F.lit(probe).cast("double"))
-    order = [delta.asc(), coord.asc()] + [F.col(c).asc() for c in (tiebreak or [])]
-    w = Window.partitionBy(*(partition_cols or [])).orderBy(*order)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
 
 
 def asof_join(

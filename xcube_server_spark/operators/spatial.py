@@ -1,18 +1,15 @@
-"""Spatial predicates and the mask semi-join (SURVEY.md §2.2 P4/P8/P10, §2.3 J1).
+"""Spatial predicates (SURVEY.md §2.2 P4/P8/P10).
 
 The reference clips a query geometry to a bbox index window
-(``xcube_server/controllers/time_series.py:166-175``), rasterizes the polygon
-to a boolean grid mask (``xcube_server/utils.py:73-83``) and applies it with
-``variable.where(mask)``. Spark-first: bbox = pure column predicate (pushed to
-parquet row-group pruning); polygon mask = a small broadcast index set
-semi-joined to the cube.
+(``xcube_server/controllers/time_series.py:166-175``). Spark-first: a bbox
+is a pure column predicate, pushed to parquet row-group pruning. The
+polygon mask join (J1) is ``cube/timeseries._series_plan``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import broadcast
 
 
 def bbox_filter(
@@ -39,30 +36,3 @@ def antimeridian_pred(lon: Column, west: float, east: float) -> Column:
     """P10 — bbox crossing the antimeridian becomes a disjunction
     ``lon >= west OR lon <= east`` (``xcube_server/utils.py:56-70``)."""
     return (lon >= F.lit(west)) | (lon <= F.lit(east))
-
-
-def mask_semi_join(
-    cube: DataFrame,
-    mask: DataFrame,
-    keys: list[str],
-    broadcast_mask: bool = True,
-    dedup_mask: bool = False,
-) -> DataFrame:
-    """J1 — keep cube cells under a (small) rasterized geometry mask.
-
-    The mask is the set of (lat_idx, lon_idx) covered by the polygon —
-    thousands to millions of rows, dwarfed by the cube. ``broadcast`` +
-    ``left_semi`` means no shuffle of the cube side at all: each task streams
-    its cube partition against the in-memory hash set. At 100 TB this is the
-    only viable plan; a shuffle join on cell ids would move the whole cube.
-
-    ``dedup_mask`` stays off by default: the rasterizer emits unique cells
-    already, and the dropDuplicates would add the plan's only exchange
-    (mask-side, tiny, but needless).
-    """
-    m = mask.select(*keys)
-    if dedup_mask:
-        m = m.dropDuplicates(keys)
-    if broadcast_mask:
-        m = broadcast(m)
-    return cube.join(m, on=keys, how="left_semi")

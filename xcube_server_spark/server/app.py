@@ -62,6 +62,7 @@ from ..cube.metadata import (
     get_datasets,
     get_tile_grid,
     get_time_series_info,
+    ol4_tile_source,
 )
 from ..cube.places import find_places
 from ..cube.reqparams import parse_query_geometry, to_datetime, to_float, to_int
@@ -340,24 +341,14 @@ class CubeServer:
             if client != "ol4":
                 raise ValueError(f"Unknown tile client {client!r}")
             st = self.static_tiles
-            nlev = st.num_levels
-            res0 = 360.0 / (st.num_level_zero_tiles_x * st.tile_w)
             h._json(
-                {
-                    "url": f"http://{h.headers.get('Host', 'localhost')}"
+                ol4_tile_source(
+                    f"http://{h.headers.get('Host', 'localhost')}"
                     "/ne2/tiles/{z}/{x}/{y}.jpg",
-                    "projection": "EPSG:4326",
-                    "minZoom": 0,
-                    "maxZoom": nlev - 1,
-                    "tileGrid": {
-                        "extent": [-180.0, -90.0, 180.0, 90.0],
-                        "origin": [-180.0, 90.0],
-                        "resolutions": [
-                            res0 / (1 << z) for z in range(nlev)
-                        ],
-                        "tileSize": [st.tile_w, st.tile_h],
-                    },
-                }
+                    (-180.0, -90.0, 180.0, 90.0),
+                    st.num_levels, st.num_level_zero_tiles_x,
+                    st.tile_w, st.tile_h,
+                )
             )
         elif (
             method == "GET"
@@ -402,6 +393,7 @@ class CubeServer:
             and parts[2] == "vars"
             and parts[4] == "tilegrid"
         ):
+            self.catalog.datasets[parts[1]].require_variable(parts[3])
             h._json(
                 get_tile_grid(
                     self.catalog,
@@ -419,7 +411,9 @@ class CubeServer:
             and parts[4] == "legend.png"
         ):
             ds, var = parts[1], parts[3]
-            st = self.catalog.datasets[ds].styles.get(var)
+            meta = self.catalog.datasets[ds]
+            meta.require_variable(var)
+            st = meta.styles.get(var)
             cmap = q.get("cbar") or (st.color_bar if st else "viridis")
             vmin = to_float("vmin", q["vmin"]) if "vmin" in q else (st.value_range[0] if st else 0.0)
             vmax = to_float("vmax", q["vmax"]) if "vmax" in q else (st.value_range[1] if st else 1.0)

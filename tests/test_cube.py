@@ -347,19 +347,11 @@ def test_tile_service_cache_and_transparency(demo_catalog):
 
 
 def test_computed_weekly_resample(spark, demo_catalog):
+    import pandas as pd
+
     from xcube_server_spark.cube.catalog import DatasetMeta
-    from xcube_server_spark.cube.computed import resample_in_time
 
     base = demo_catalog.datasets["demo"]
-    weekly = resample_in_time(demo_catalog.cube("demo", 0))
-    weeks = sorted(
-        r["time"].date().isoformat()
-        for r in weekly.select("time").distinct().collect()
-    )
-    # golden labels: pandas 1W Sunday anchors for the demo timestamps
-    # (test/controllers/test_time_series.py:138 — first three; our synth cube
-    # spans Jan 16-30 → weeks ending Jan 22, Jan 29, Feb 5)
-    assert weeks == ["2017-01-22", "2017-01-29", "2017-02-05"]
     # registered as a computed dataset through the catalog
     meta = DatasetMeta(
         identifier="demo-1w",
@@ -375,6 +367,14 @@ def test_computed_weekly_resample(spark, demo_catalog):
     )
     demo_catalog.register(meta)
     df = demo_catalog.cube("demo-1w", 0)
+    weeks = sorted(
+        r["time"].date().isoformat()
+        for r in df.select("time").distinct().collect()
+    )
+    # golden labels: pandas 1W Sunday anchors for the demo timestamps
+    # (test/controllers/test_time_series.py:138 — first three; our synth cube
+    # spans Jan 16-30 → weeks ending Jan 22, Jan 29, Feb 5)
+    assert weeks == ["2017-01-22", "2017-01-29", "2017-02-05"]
     assert df.select("time").distinct().count() == 3
     # mean of timesteps within one week: week of Jan 22 contains t0 only
     one = df.filter(
@@ -386,6 +386,34 @@ def test_computed_weekly_resample(spark, demo_catalog):
     assert one[0]["kd489"] == pytest.approx(l0[0]["kd489"], abs=1e-6)
     week2 = np.mean([l0[1]["kd489"], l0[2]["kd489"], l0[3]["kd489"]])
     assert one[1]["kd489"] == pytest.approx(float(week2), abs=1e-5)
+
+    # independent oracle: pandas resample('1W').mean() of the input,
+    # collected on the driver, for every output step (weeks of 1 and of 3
+    # input steps) and a sample of cells
+    cells = F.lit(False)
+    for i, j in ((0, 0), (10, 10), (37, 151), (99, 199), (63, 5)):
+        cells |= (F.col("lat_idx") == i) & (F.col("lon_idx") == j)
+    var_names = ["conc_chl", "conc_tsm", "kd489"]
+    want = {
+        key: g.set_index("time")[var_names].resample("1W").mean()
+        for key, g in demo_catalog.cube("demo", 0).filter(cells)
+        .toPandas().groupby(["lat_idx", "lon_idx"])
+    }
+    labels = next(iter(want.values())).index
+    assert demo_catalog.times("demo-1w") == [
+        ts.strftime("%Y-%m-%d %H:%M:%S") for ts in labels
+    ]
+    for t, label in enumerate(labels):
+        got = demo_catalog.cube("demo-1w", 0, t).filter(cells).toPandas()
+        assert len(got) == len(want)
+        for _, row in got.iterrows():
+            assert row["time_idx"] == t and row["time"] == label
+            expected = want[(row["lat_idx"], row["lon_idx"])].loc[label]
+            for v in var_names:
+                if pd.isna(expected[v]):
+                    assert pd.isna(row[v]), (t, v)
+                else:
+                    assert row[v] == pytest.approx(expected[v], abs=1e-5), (t, v)
 
 
 # -- places ------------------------------------------------------------------
@@ -460,6 +488,14 @@ def test_metadata_endpoints(demo_catalog):
     assert coords["size"] == 5 and coords["coordinates"][0] == "2017-01-16T10:09:22Z"
     lat = get_coordinates(demo_catalog, "demo", "lat")
     assert lat["size"] == H and lat["coordinates"][0] > lat["coordinates"][-1]
+    # the spatial dumps come from the grid metadata the dim tables were
+    # written from, and equal those tables
+    base = demo_catalog.datasets["demo"].base_path
+    for dim in ("lat", "lon"):
+        table = demo_catalog.spark.read.parquet(f"{base}/coords_{dim}")
+        assert get_coordinates(demo_catalog, "demo", dim)["coordinates"] == [
+            r["value"] for r in table.orderBy("idx").collect()
+        ]
     tg = get_tile_grid(demo_catalog, "demo")
     assert tg["tileSize"] == [64, 64]
 

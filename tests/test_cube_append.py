@@ -9,7 +9,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from xcube_server_spark.cube.catalog import CubeCatalog, StyleMeta
+from xcube_server_spark.cube.catalog import CubeCatalog, DatasetMeta, StyleMeta
 from xcube_server_spark.cube.tiles import TileService
 from xcube_server_spark.sources.cube_ingest import (
     DEMO_TIMES,
@@ -22,6 +22,7 @@ from xcube_server_spark.streaming.cube_append import (
 )
 
 W, H = 64, 32  # 3 levels at tile_size 16
+VARS = ["conc_chl", "conc_tsm", "kd489"]
 
 
 @pytest.fixture()
@@ -110,6 +111,44 @@ def test_streamed_slice_append_serves_current_tiles(spark, split_cubes):
         got = spark.read.parquet(os.path.join(base_inc, f"l{k}")).count()
         want = spark.read.parquet(os.path.join(base_full, f"l{k}")).count()
         assert got == want, (k, got, want)
+
+
+def test_weekly_dataset_over_appended_cube_serves_new_weeks(spark, split_cubes):
+    """A computed weekly dataset over an appended cube follows the append:
+    the Jan 28 slice joins the Jan 29 week, the Jan 30 slice opens the Feb 5
+    week, and axis, frames and tiles equal those of the same dataset over
+    the full cube, even when the catalog served it before the append."""
+    base_full, base_inc, tail_path, grid, grid_head, tg = split_cubes
+    cats = {}
+    for name, base, g in (("inc", base_inc, grid_head), ("full", base_full, grid)):
+        cat = CubeCatalog(spark)
+        cat.save_meta(cat.register_written_cube(name, base, g, tg, VARS))
+        cat.register(DatasetMeta(
+            identifier=f"{name}-1w", title="weekly", base_path="", grid=g,
+            tile_grid=tg, variables=VARS, computed=True,
+            function="resample_in_time", input_datasets=[name],
+            input_params={"period": "1W"},
+        ))
+        cats[name] = cat
+    cat, full = cats["inc"], cats["full"]
+    assert cat.times("inc-1w") == ["2017-01-22 00:00:00", "2017-01-29 00:00:00"]
+    TileService(cat).get_tile("inc-1w", "kd489", 0, 0, 0, time="current")
+
+    CubeLevelAppendSink(base_inc, tg.num_levels)(
+        spark.read.parquet(tail_path), batch_id=0
+    )
+    register_appended_slices(cat, "inc", list(DEMO_TIMES[3:]))
+
+    assert cat.times("inc-1w") == full.times("full-1w") == [
+        "2017-01-22 00:00:00", "2017-01-29 00:00:00", "2017-02-05 00:00:00",
+    ]
+    order = ["lat_idx", "lon_idx"]
+    for t in range(3):
+        assert cat.cube("inc-1w", 0, t).orderBy(order).collect() \
+            == full.cube("full-1w", 0, t).orderBy(order).collect()
+    for time in ("current", "2017-01-29"):
+        assert TileService(cat).get_tile("inc-1w", "kd489", 0, 0, 0, time=time) \
+            == TileService(full).get_tile("full-1w", "kd489", 0, 0, 0, time=time)
 
 
 def test_append_sink_replay_is_exactly_once(spark, split_cubes):

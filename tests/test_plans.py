@@ -93,9 +93,17 @@ def test_render_tiles_pushes_tile_window_into_scan(spark, tmp_path):
     window with ``between`` bounds that reach the parquet scan's
     ``PushedFilters`` (row-group pruning): on a north-up and an ``inv_y``
     stored cube, and for a computed weekly cube in its input scan, through
-    the transform's aggregate."""
+    the transform's aggregate, where the output step also prunes the input's
+    ``time_idx`` partitions."""
+    import re
+
     from xcube_server_spark.cube.catalog import CubeCatalog, DatasetMeta
     from xcube_server_spark.cube.tiles import render_tiles
+    from xcube_server_spark.plans.explain import (
+        count_parquet_scans,
+        executed_plan,
+        formatted_plan,
+    )
     from xcube_server_spark.sources.cube_ingest import (
         synth_demo_cube,
         synth_noise_cube,
@@ -134,6 +142,15 @@ def test_render_tiles_pushes_tile_window_into_scan(spark, tmp_path):
             f"LessThanOrEqual(lon_idx,{16 * x + 15})",
         ):
             assert f in pf, (ds, z, x, y, f, pf)
+    # a computed tile reads its input once, only the partitions of its
+    # output step's input steps (week 0 = step 0; week 1 = steps 1-3), and
+    # shuffles for the weekly mean and the tile grouping alone
+    for time, steps in ((None, "= 0"), ("2017-01-29", "IN (1,2,3)")):
+        df = render_tiles(cat, "demo-1w", "conc_tsm", 1, time=time, tiles=[(1, 0)])
+        part = re.findall(r"PartitionFilters: \[([^\]]*)\]", formatted_plan(df))
+        assert count_parquet_scans(df) == 1, part
+        assert re.search(rf"time_idx#\d+ {re.escape(steps)}", part[0]), part
+        assert count_exchanges(df) <= 2, executed_plan(df)
 
 
 def test_stride_decimation_no_shuffle(spark, sf_dir):

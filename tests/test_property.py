@@ -12,6 +12,7 @@ import pandas as pd
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
+from xcube_server_spark.cube.computed import weekly_sunday_date
 from xcube_server_spark.cube.grid import GridMeta, morton_code
 
 
@@ -50,14 +51,12 @@ def test_rnd_formula_matches_duckdb(x, n):
     )
 )
 def test_weekly_label_matches_pandas_resample(ts):
-    """Our Sunday-anchored weekly label must equal pandas resample('1W')'s
-    bin label for any timestamp (the golden-label convention,
-    FIXTURES.md F-7)."""
+    """The engine's driver-side Sunday-anchored weekly label must equal
+    pandas resample('1W')'s bin label for any timestamp (the golden-label
+    convention, FIXTURES.md F-7)."""
     label = pd.Series([1.0], index=pd.DatetimeIndex([ts])).resample("1W").mean()
     pandas_label = label.index[0].date()
-    d = ts.date()
-    ours = d + dt.timedelta(days=(8 - ((d.weekday() + 1) % 7 + 1)) % 7)
-    assert ours == pandas_label
+    assert weekly_sunday_date(ts.date()) == pandas_label
 
 
 @settings(max_examples=200, deadline=None)

@@ -96,6 +96,8 @@ def test_coords_endpoint(server):
     status, doc = _get_json(f"{server}/datasets/demo/coords/time")
     assert status == 200 and doc["size"] == 5
     assert doc["coordinates"][0] == "2017-01-16T10:09:22Z"
+    status, doc = _get_json(f"{server}/datasets/demo/coords/depth")
+    assert status == 404, doc
 
 
 def test_tile_endpoint_and_style_override(server):
@@ -870,6 +872,39 @@ def test_wmts_get_feature_info_computed_dataset(server, cube_server):
         assert abs(doc["value"] - expected) < 1e-9
     finally:
         del cat.datasets["demo-1w"]
+
+
+def test_metadata_routes_run_no_spark_job_for_a_computed_dataset(
+    server, cube_server
+):
+    """A computed dataset's time axis is its step table, worked out on the
+    driver: listing the datasets and the WMTS capabilities launch no Spark
+    job, also for a freshly registered computed dataset."""
+    from xcube_server_spark.cube.catalog import DatasetMeta
+
+    cat = cube_server.catalog
+    base = cat.datasets["demo"]
+    cat.register(DatasetMeta(
+        identifier="demo-1w-meta", title="weekly", base_path="",
+        grid=base.grid, tile_grid=base.tile_grid, variables=base.variables,
+        computed=True, function="resample_in_time", input_datasets=["demo"],
+        input_params={"period": "1W"},
+    ))
+    try:
+        for path, rid, want in (
+            ("datasets", "meta-datasets", b'"demo-1w-meta"'),
+            ("datasets?details=1", "meta-details", b'"2017-02-05T00:00:00Z"'),
+            ("wmts/1.0.0/WMTSCapabilities.xml", "meta-capabilities",
+             b"<Value>2017-02-05T00:00:00Z</Value>"),
+        ):
+            req = urllib.request.Request(
+                f"{server}/{path}", headers={"X-Request-Id": rid}
+            )
+            with urllib.request.urlopen(req, timeout=60) as r:
+                assert r.status == 200 and want in r.read(), path
+            assert _jobs(cat, rid) == [], path
+    finally:
+        del cat.datasets["demo-1w-meta"]
 
 
 def test_tile_invalid_time_is_bad_request(server):

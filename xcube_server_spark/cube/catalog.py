@@ -2,10 +2,11 @@
 dataset registry (``xcube_server/context.py:57-205``).
 
 Holds per-dataset metadata (grid, tile grid, variable list, styles) and the
-parquet paths of the LOD tables; memoizes DataFrames per (dataset, level)
-the way the reference memoizes opened stores behind a double-checked lock
-(``xcube_server/context.py:201-205``) — here a plain dict is enough because
-Spark DataFrames are immutable plans, not stateful handles.
+parquet paths of the LOD tables; memoizes stored levels' DataFrames per
+(dataset, level) the way the reference memoizes opened stores behind a
+double-checked lock (``xcube_server/context.py:201-205``) — here a plain
+dict is enough because Spark DataFrames are immutable plans, not stateful
+handles.
 
 Config comes from the same YAML shape the reference uses
 (``xcube_server/res/demo/config.yml``; FIXTURES.md F-6): ``Datasets`` with
@@ -24,6 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.paths import join_store_path, open_store_text
+from .computed import apply_computed, step_table
 from .grid import GridMeta, IndexWindow, TileGridMeta
 
 _RAW_SUFFIXES = (".zarr", ".levels", ".nc", ".nc4", ".h5", ".hdf5", ".tif", ".tiff")
@@ -115,7 +117,6 @@ class CubeCatalog:
         self.spark = spark
         self.datasets: dict[str, DatasetMeta] = {}
         self._df_cache: dict[tuple[str, int], DataFrame] = {}
-        self._times_cache: dict[str, list[str]] = {}
         # union of all configured PlaceGroups (None until a config sets them)
         self.places: DataFrame | None = None
         self.place_titles: dict[str, str] = {}
@@ -289,61 +290,34 @@ class CubeCatalog:
             columns=columns, filter=filt
         )
 
-    def cube(self, identifier: str, level: int = 0) -> DataFrame:
+    def cube(
+        self, identifier: str, level: int = 0, t_idx: int | None = None
+    ) -> DataFrame:
         """DataFrame of one LOD level (P2 level projection,
-        ``xcube_server/context.py:153-158``)."""
+        ``xcube_server/context.py:153-158``) at time step ``t_idx``, or at
+        every step. Only stored levels are memoized: a computed level is a
+        fresh lazy plan over them (``computed.apply_computed``)."""
+        meta = self.datasets[identifier]
+        if meta.computed:
+            return apply_computed(self, meta, level, t_idx)
         key = (identifier, level)
         if key not in self._df_cache:
-            meta = self.datasets[identifier]
-            if meta.computed:
-                from .computed import apply_computed  # local import, no cycle
-
-                self._df_cache[key] = apply_computed(self, meta, level)
-            else:
-                self._df_cache[key] = self.spark.read.parquet(
-                    self.level_path(identifier, level)
-                )
-        return self._df_cache[key]
+            self._df_cache[key] = self.spark.read.parquet(
+                self.level_path(identifier, level)
+            )
+        df = self._df_cache[key]
+        return df if t_idx is None else df.filter(F.col("time_idx") == t_idx)
 
     def times(self, identifier: str) -> list[str]:
         """Time axis of a dataset, in the grid's ``YYYY-MM-DD HH:MM:SS``
-        string form. A computed cube's axis comes from the computed frame
-        (e.g. weekly labels after ``resample_in_time`` — NOT the input's
-        timestamps, ``xcube_server/mldataset.py:369-382``) and is cached
-        after one tiny distinct-collect."""
+        string form, from metadata with no Spark job. A computed cube's axis
+        is its step table's labels, worked out from its input's axis on each
+        call (e.g. weekly labels after ``resample_in_time`` — NOT the input's
+        timestamps, ``xcube_server/mldataset.py:369-382``)."""
         meta = self.datasets[identifier]
         if not meta.computed:
             return list(meta.grid.times)
-        if identifier not in self._times_cache:
-            rows = (
-                self.cube(identifier)
-                .select("time_idx", "time")
-                .distinct()
-                .orderBy("time_idx")
-                .collect()
-            )
-            self._times_cache[identifier] = [
-                r["time"].strftime("%Y-%m-%d %H:%M:%S") for r in rows
-            ]
-        return self._times_cache[identifier]
-
-    def coords(self, identifier: str, dim: str) -> DataFrame:
-        meta = self.datasets[identifier]
-        if meta.computed:
-            if dim == "time":
-                # the computed frame's own axis (e.g. weekly labels),
-                # shaped like a dim table
-                rows = [
-                    (i, t) for i, t in enumerate(self.times(identifier))
-                ]
-                return self.spark.createDataFrame(
-                    rows, "idx int, value string"
-                ).selectExpr("idx", "CAST(value AS TIMESTAMP) AS value")
-            # spatial axes are level-aligned with the first input
-            meta = self.datasets[meta.input_datasets[0]]
-        return self.spark.read.parquet(
-            join_store_path(meta.base_path, f"coords_{dim}")
-        )
+        return [label for label, _ in step_table(self, meta)]
 
     # -- config loading (F-6) ------------------------------------------------
 
@@ -520,7 +494,6 @@ class ConfigWatcher:
             self._mtime = mtime
             self.catalog.datasets.clear()
             self.catalog._df_cache.clear()
-            self.catalog._times_cache.clear()
             self.catalog.places = None
             self.catalog.load_config(self.config_path)
             return True

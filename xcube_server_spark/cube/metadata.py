@@ -4,8 +4,7 @@ Reference: ``get_datasets(details=…)`` / variable + coordinate dumps
 (``xcube_server/controllers/catalogue.py:13-111``), WMTS capabilities
 (``xcube_server/controllers/wmts.py:12-287``). These are metadata reads: the
 expensive part in the reference is forcing dataset opens; in our engine the
-catalog already holds everything, and coordinate dumps come from the tiny
-dim tables (a ``collect()`` of hundreds of rows).
+catalog already holds everything, coordinate dumps included: no Spark job.
 """
 
 from __future__ import annotations
@@ -70,14 +69,18 @@ def get_datasets(catalog: CubeCatalog, details: bool = False) -> dict[str, Any]:
 
 def get_coordinates(catalog: CubeCatalog, ds_id: str, dim: str) -> dict[str, Any]:
     """Coordinate dump ``{name, size, dtype, coordinates[]}``
-    (``xcube_server/controllers/catalogue.py:97-111``) from the dim table."""
-    rows = catalog.coords(ds_id, dim).orderBy("idx").collect()
-    vals = [r["value"] for r in rows]
+    (``xcube_server/controllers/catalogue.py:97-111``) from the catalog's
+    metadata, which the ingest also writes the dim tables from."""
+    grid = catalog.datasets[ds_id].grid
     if dim == "time":
         dtype = "datetime64[ns]"
-        vals = [v.strftime("%Y-%m-%dT%H:%M:%SZ") for v in vals]
+        vals = [t.replace(" ", "T") + "Z" for t in catalog.times(ds_id)]
     else:
         dtype = "float64"
+        n, coord_of = {
+            "lat": (grid.height, grid.lat_of), "lon": (grid.width, grid.lon_of)
+        }[dim]
+        vals = [coord_of(i) for i in range(n)]
     return {"name": dim, "size": len(vals), "dtype": dtype, "coordinates": vals}
 
 

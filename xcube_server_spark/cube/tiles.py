@@ -113,12 +113,11 @@ def render_tiles(
     meta = catalog.datasets[ds_id]
     tg = meta.tile_grid
     level = tg.level_for_zoom(z)
-    cube = catalog.cube(ds_id, level)
     t_idx, _ = _nearest_time(catalog.times(ds_id), time)
     st = style or meta.styles.get(var) or StyleMeta()
     vmin, vmax = st.value_range
 
-    df = cube.filter(F.col("time_idx") == t_idx)
+    df = catalog.cube(ds_id, level, t_idx)
     if tiles is not None:
         df = df.filter(window_filter(
             [tile_window(meta.grid, tg, z, x, y)[1] for x, y in tiles]
@@ -304,13 +303,10 @@ class TileService:
         if table is not None:
             values = table.column(var).to_pylist()
         else:
-            values = [
-                r[0]
-                for r in self.catalog.cube(ds_id, level)
-                .filter((F.col("time_idx") == t_idx) & window_filter([window]))
-                .select(var)
-                .collect()
-            ]
+            cell = self.catalog.cube(ds_id, level, t_idx).filter(
+                window_filter([window])
+            )
+            values = [r[0] for r in cell.select(var).collect()]
         if not values or values[0] is None:
             return None
         return float(values[0])

@@ -132,5 +132,4 @@ def register_appended_slices(
     )
     for key in [k for k in catalog._df_cache if k[0] == ds_id]:
         del catalog._df_cache[key]
-    catalog._times_cache.pop(ds_id, None)
     catalog.save_meta(meta)

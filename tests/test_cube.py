@@ -446,7 +446,7 @@ def places_df(spark, tmp_path_factory):
 
 
 def test_places_load_reassigns_ids_and_strips_id(places_df):
-    rows = places_df.filter(F.col("collection") == "inside-cube").collect()
+    rows = places_df[places_df["collection"] == "inside-cube"].to_dict("records")
     assert [r["feature_id"] for r in rows] == ["0", "1", "2"]
     for r in rows:
         assert "ID" not in r["properties"] and "Name" in r["properties"]
@@ -454,7 +454,7 @@ def test_places_load_reassigns_ids_and_strips_id(places_df):
 
 def test_places_bbox_filter_returns_inside(places_df):
     # F-8 golden: bbox covering the demo extent returns exactly inside-cube
-    out = find_places(places_df, bbox=DEMO_EXTENT).collect()
+    out = find_places(places_df, bbox=DEMO_EXTENT).to_dict("records")
     assert sorted(r["properties"]["Name"] for r in out) == ["p0", "p1", "p2"]
 
 
@@ -464,13 +464,13 @@ def test_places_polygon_and_query_expr(places_df):
         "type": "Polygon",
         "coordinates": [[[1.0, 51.0], [3.0, 51.0], [3.0, 52.4], [1.0, 52.4], [1.0, 51.0]]],
     }
-    out = find_places(places_df, geometry=quad).collect()
+    out = find_places(places_df, geometry=quad).to_dict("records")
     assert sorted(r["properties"]["Name"] for r in out) == ["p0", "p1"]
     # P11 query_expr — implemented (reference raises NotImplementedError,
     # xcube_server/controllers/places.py:84)
     out2 = find_places(
         places_df, bbox=DEMO_EXTENT, query_expr="properties['Name'] = 'p1'"
-    ).collect()
+    ).to_dict("records")
     assert len(out2) == 1 and out2[0]["properties"]["Name"] == "p1"
 
 

@@ -113,6 +113,25 @@ def test_streamed_slice_append_serves_current_tiles(spark, split_cubes):
         assert got == want, (k, got, want)
 
 
+def test_live_tile_service_serves_current_after_append(spark, split_cubes):
+    """A service that cached the 'current' tile before an append serves the
+    new last step after it, the bytes a fresh service renders."""
+    _, base_inc, tail_path, _grid, grid_head, tg = split_cubes
+    cat = CubeCatalog(spark)
+    cat.save_meta(cat.register_written_cube("inc", base_inc, grid_head, tg, VARS))
+    svc = TileService(cat)
+    before = svc.get_tile("inc", "kd489", 0, 0, 0, time="current")
+
+    CubeLevelAppendSink(base_inc, tg.num_levels)(
+        spark.read.parquet(tail_path), batch_id=0
+    )
+    register_appended_slices(cat, "inc", list(DEMO_TIMES[3:]))
+
+    after = svc.get_tile("inc", "kd489", 0, 0, 0, time="current")
+    assert after == TileService(cat).get_tile("inc", "kd489", 0, 0, 0, time="current")
+    assert after != before
+
+
 def test_weekly_dataset_over_appended_cube_serves_new_weeks(spark, split_cubes):
     """A computed weekly dataset over an appended cube follows the append:
     the Jan 28 slice joins the Jan 29 week, the Jan 30 slice opens the Feb 5

@@ -745,17 +745,26 @@ def test_pooled_worker_tags_every_request(cube_server, monkeypatch):
     import socket
     import time
 
+    from xcube_server_spark.cube.catalog import DatasetMeta
     from xcube_server_spark.server import app
 
     monkeypatch.setattr(app, "REQUEST_THREADS", 1)
     monkeypatch.setattr(app, "REQUEST_TIMEOUT_S", 1)
+    # a point series of a computed dataset runs the Spark plan
+    base = cube_server.catalog.datasets["demo"]
+    cube_server.catalog.register(DatasetMeta(
+        identifier="demo-1w-pool", title="weekly", base_path="", grid=base.grid,
+        tile_grid=base.tile_grid, variables=base.variables, computed=True,
+        function="resample_in_time", input_datasets=["demo"],
+        input_params={"period": "1W"},
+    ))
     srv = CubeServer(cube_server.catalog, places=cube_server.places)
     srv.start()
     try:
-        url = f"http://127.0.0.1:{srv.port}/places/pts?bbox=0,50,5,52.5"
+        url = f"http://127.0.0.1:{srv.port}/ts/demo-1w-pool/conc_chl/point?lon=2.1&lat=51.4"
         for rid in ("pool-a", "pool-b"):
             status, doc = _ts_request(url, rid=rid)
-            assert status == 200 and doc["features"]
+            assert status == 200 and doc["results"]
         a, b = _jobs(srv.catalog, "pool-a"), _jobs(srv.catalog, "pool-b")
         assert a and b and not set(a) & set(b)
         status, _ = _ts_request(url)
@@ -768,6 +777,22 @@ def test_pooled_worker_tags_every_request(cube_server, monkeypatch):
     finally:
         srv.stop()
         srv.httpd.server_close()
+        del cube_server.catalog.datasets["demo-1w-pool"]
+
+
+def test_places_routes_launch_no_job(server, cube_server):
+    """Places are answered from the driver-side table: the inventory, bbox,
+    polygon and dataset-bounds routes launch no Spark job."""
+    box = _polygon([[0.0, 50.0], [5.0, 50.0], [5.0, 53.0], [0.0, 53.0], [0.0, 50.0]])
+    for rid, path, body in (
+        ("places-inventory", "places", None),
+        ("places-bbox", "places/pts?bbox=0,50,5,52.5", None),
+        ("places-polygon", "places/all", box),
+        ("places-dataset", "places/pts/demo", None),
+    ):
+        status, doc = _ts_request(f"{server}/{path}", body, rid)
+        assert status == 200 and (doc.get("features") or doc.get("placeGroups")), rid
+        assert _jobs(cube_server.catalog, rid) == [], rid
 
 
 def test_place_groups_endpoint(server):

@@ -166,6 +166,28 @@ def test_config_hot_reload(spark, tmp_path):
     assert watcher.maybe_reload()
     assert watcher.catalog.datasets["demo"].title == "Demo Two"
 
+    # PlaceGroups follow each reload: an extra feature, then the group gone
+    towns = tmp_path / "towns.geojson"
+    datasets = f"Datasets:\n  - Identifier: demo\n    Title: Demo Two\n    Path: {base}\n"
+    places = "PlaceGroups:\n  - Identifier: towns\n    Title: Towns\n    Path: towns.geojson\n"
+    for k, (names, text) in enumerate(
+        [(["t0"], datasets + places), (["t0", "t1"], datasets + places), ([], datasets)]
+    ):
+        towns.write_text(_json.dumps({"type": "FeatureCollection", "features": [
+            {"type": "Feature", "properties": {"Name": n},
+             "geometry": {"type": "Point", "coordinates": [1.0, 51.0]}}
+            for n in names
+        ]}))
+        cfg.write_text(text)
+        os.utime(cfg, (time.time() + 4 + 2 * k, time.time() + 4 + 2 * k))
+        assert watcher.maybe_reload()
+        cat = watcher.catalog
+        if names:
+            assert [p["Name"] for p in cat.places["properties"]] == names
+            assert cat.place_titles == {"towns": "Towns"}
+        else:
+            assert cat.places is None and cat.place_titles == {}
+
 
 def test_cli_parser():
     from xcube_server_spark.cli import make_parser

@@ -50,8 +50,8 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark(app_name="xcube-server-spark")
     catalog = CubeCatalog(spark)
     watcher = ConfigWatcher(catalog, args.config)
-    # no places= snapshot: _live_places() reads the catalog each request, so
-    # a ConfigWatcher reload serves the fresh PlaceGroups union
+    # no places= table: _live_places() reads the catalog each request, so
+    # a ConfigWatcher reload serves the fresh PlaceGroups table
     server = CubeServer(catalog, host=args.address, port=args.port)
     server.tiles = TileService(
         catalog,

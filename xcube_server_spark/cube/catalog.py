@@ -21,12 +21,14 @@ import json
 import os
 from dataclasses import dataclass, field
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.paths import join_store_path, open_store_text
 from .computed import apply_computed, step_table
 from .grid import GridMeta, IndexWindow, TileGridMeta
+from .places import load_place_group, union_place_groups
 
 _RAW_SUFFIXES = (".zarr", ".levels", ".nc", ".nc4", ".h5", ".hdf5", ".tif", ".tiff")
 
@@ -117,8 +119,9 @@ class CubeCatalog:
         self.spark = spark
         self.datasets: dict[str, DatasetMeta] = {}
         self._df_cache: dict[tuple[str, int], DataFrame] = {}
-        # union of all configured PlaceGroups (None until a config sets them)
-        self.places: DataFrame | None = None
+        # driver-side table of all configured PlaceGroups (None until a
+        # config sets them)
+        self.places: pd.DataFrame | None = None
         self.place_titles: dict[str, str] = {}
         # ServiceProvider block from the YAML config (WMTS capabilities)
         self.service_provider: dict = {}
@@ -454,26 +457,19 @@ class CubeCatalog:
             ]
             meta.property_mapping = dict(ds.get("PropertyMapping") or {})
         # top-level PlaceGroups (reference config.yml:52-58): Identifier,
-        # Title, Path (GeoJSON glob relative to the config file)
-        groups = cfg.get("PlaceGroups", [])
-        if not groups:
-            # a reload that drops PlaceGroups must not keep serving the old
-            # union (or its titles)
-            self.places = None
-            self.place_titles = {}
-        if groups:
-            from .places import load_place_group, union_place_groups
-
-            base_dir = os.path.dirname(os.path.abspath(path))
-            dfs = []
-            self.place_titles = {}
-            for g in groups:
-                gpath = g["Path"]
-                if not os.path.isabs(gpath):
-                    gpath = os.path.join(base_dir, gpath)
-                dfs.append(load_place_group(self.spark, g["Identifier"], gpath))
-                self.place_titles[g["Identifier"]] = g.get("Title", g["Identifier"])
-            self.places = union_place_groups(dfs)
+        # Title, Path (GeoJSON glob relative to the config file). A reload
+        # replaces the table; one that drops PlaceGroups leaves none.
+        groups = cfg.get("PlaceGroups") or []
+        base_dir = os.path.dirname(os.path.abspath(path))
+        self.places = union_place_groups([
+            load_place_group(
+                self.spark, g["Identifier"], os.path.join(base_dir, g["Path"])
+            )
+            for g in groups
+        ]) if groups else None
+        self.place_titles = {
+            g["Identifier"]: g.get("Title", g["Identifier"]) for g in groups
+        }
 
 
 class ConfigWatcher:
@@ -494,7 +490,6 @@ class ConfigWatcher:
             self._mtime = mtime
             self.catalog.datasets.clear()
             self.catalog._df_cache.clear()
-            self.catalog.places = None
             self.catalog.load_config(self.config_path)
             return True
         return False

@@ -7,40 +7,53 @@ filtered by shapely ``intersects`` against a query geometry
 (``xcube_server/controllers/places.py:63-94``) — and the declared
 ``query_expr`` parameter raises NotImplementedError (``places.py:84``).
 
-Spark-first: features live in a DataFrame ``(collection, feature_id,
-geometry, lon, lat, properties)``; bbox intersection is a pure column
-predicate; polygon intersection for point features is a driver-computed
-bbox prefilter + exact point-in-polygon via the same numpy rasterizer core;
-and ``query_expr`` is FINISHED — it is simply ``F.expr`` over the properties
-map (the expression language the reference never implemented).
+Like the reference, places are answered in process: a place group is a
+pandas table on the driver ``(collection, feature_id, geometry, lon, lat,
+minx, miny, maxx, maxy, properties)``, and ``find_places`` filters it with
+numpy masks — bbox overlap for every feature, plus the even-odd
+point-in-polygon test for point features under a polygon query. Only
+``query_expr`` runs Spark: the surviving rows are filtered with ``F.expr``
+over the properties map, the expression language the reference never
+implemented.
 """
 
 from __future__ import annotations
 
 import glob
 import json
-import os
 
-from pyspark.sql import DataFrame, SparkSession
+import numpy as np
+import pandas as pd
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from .rasterize import Geometry, geometry_bbox, points_in_geometry
 
-import numpy as np
+COLUMNS = [
+    "collection", "feature_id", "geometry", "lon", "lat",
+    "minx", "miny", "maxx", "maxy", "properties",
+]
+SCHEMA = (
+    "collection string, feature_id string, geometry string,"
+    " lon double, lat double,"
+    " minx double, miny double, maxx double, maxy double,"
+    " properties map<string,string>"
+)
 
 
 def load_place_group(
     spark: SparkSession, name: str, path_glob: str
-) -> DataFrame:
+) -> pd.DataFrame:
     """S7 GeoJSON scan: one collection from a glob of GeoJSON files.
 
     Sequential feature ids are assigned in load order and ``ID``/``id`` keys
     are dropped from properties (parity: ``xcube_server/context.py:378-399``).
-    Point coordinates are hoisted into (lon, lat) columns so spatial
-    predicates stay in the JVM.
+    Point coordinates are hoisted into (lon, lat) columns and every
+    feature's bbox into (minx, miny, maxx, maxy); a feature with a null
+    geometry (RFC 7946 §3.2) or an unsupported one has no bbox. The table
+    stays on the driver; ``spark`` is not used.
     """
     rows = []
-    fid = 0
     for path in sorted(glob.glob(path_glob)):
         with open(path) as f:
             doc = json.load(f)
@@ -51,85 +64,68 @@ def load_place_group(
                 for k, v in (feat.get("properties") or {}).items()
                 if k not in ("ID", "id")
             }
-            geom = feat.get("geometry") or {}
+            geom = feat.get("geometry")
             lon = lat = None
-            if geom.get("type") == "Point":
+            if geom and geom.get("type") == "Point":
                 lon, lat = float(geom["coordinates"][0]), float(geom["coordinates"][1])
             try:
-                minx, miny, maxx, maxy = geometry_bbox(geom)
+                bbox = geometry_bbox(geom) if geom else (None,) * 4
             except ValueError:
-                minx = miny = maxx = maxy = None
+                bbox = (None,) * 4
             rows.append(
-                (name, str(fid), json.dumps(geom), lon, lat,
-                 minx, miny, maxx, maxy, props)
+                (name, str(len(rows)), json.dumps(geom), lon, lat, *bbox, props)
             )
-            fid += 1
-    return spark.createDataFrame(
-        rows,
-        "collection string, feature_id string, geometry string,"
-        " lon double, lat double,"
-        " minx double, miny double, maxx double, maxy double,"
-        " properties map<string,string>",
+    return pd.DataFrame(rows, columns=COLUMNS).astype(
+        {c: float for c in ("lon", "lat", "minx", "miny", "maxx", "maxy")}
     )
 
 
-def union_place_groups(groups: list[DataFrame]) -> DataFrame:
+def union_place_groups(groups: list[pd.DataFrame]) -> pd.DataFrame:
     """U1 — the ``all`` place group is UNION ALL of every group
     (``xcube_server/context.py:326-341``)."""
-    out = groups[0]
-    for g in groups[1:]:
-        out = out.unionByName(g)
-    return out
+    return pd.concat(groups, ignore_index=True)
 
 
 def find_places(
-    places: DataFrame,
+    places: pd.DataFrame,
     geometry: Geometry | None = None,
     bbox: tuple[float, float, float, float] | None = None,
     query_expr: str | None = None,
-) -> DataFrame:
-    """P8 geometry-intersection filter + P11 attribute expression.
+) -> pd.DataFrame:
+    """P8 geometry-intersection filter + P11 attribute expression; the kept
+    rows in load order.
 
-    bbox → pure column predicate (pushable). Polygon → bbox prefilter in the
-    plan + exact point-in-polygon applied per collected candidate set on the
-    driver when the candidate set is small; here point features are filtered
-    exactly with the numpy even-odd test via a pandas UDF-free two-phase
-    plan: candidates = bbox filter; exact test on (lon, lat) columns happens
-    in a vectorized mapInPandas-compatible helper. ``query_expr`` is a Spark
-    SQL boolean expression over columns/properties — finishing what the
-    reference stubbed (``xcube_server/controllers/places.py:84``).
+    A feature is kept when its bbox overlaps the query bbox (inclusive;
+    a feature without a bbox never matches). Under a Polygon/MultiPolygon
+    query a point feature must also pass the even-odd point-in-polygon
+    test; other features keep the bbox verdict (polygon∩polygon needs a
+    geometry library). ``query_expr`` is a Spark SQL boolean expression
+    over the columns and ``properties`` — finishing what the reference
+    stubbed (``xcube_server/controllers/places.py:84``).
     """
-    out = places
     if geometry is not None and bbox is None:
         bbox = geometry_bbox(geometry)
     if bbox is not None:
         west, south, east, north = bbox
-        # bbox-overlap works for ANY feature geometry (the loader hoists
-        # per-feature bboxes); point features degenerate to containment.
-        out = out.filter(
-            (F.col("maxx") >= west)
-            & (F.col("minx") <= east)
-            & (F.col("maxy") >= south)
-            & (F.col("miny") <= north)
-        )
-    if geometry is not None and geometry.get("type") in ("Polygon", "MultiPolygon"):
-        geom_json = json.dumps(geometry)
-
-        def exact(iterator):
-            import pandas as pd
-
-            g = json.loads(geom_json)
-            for pdf in iterator:
-                # exact point-in-polygon for point features; non-point
-                # features keep the bbox-overlap verdict (documented
-                # approximation — full polygon∩polygon needs a geometry lib)
-                is_point = pdf["lon"].notna().to_numpy()
-                px = pdf["lon"].fillna(0.0).to_numpy(dtype=float)
-                py = pdf["lat"].fillna(0.0).to_numpy(dtype=float)
-                keep = points_in_geometry(px, py, g) | ~is_point
-                yield pdf[pd.Series(keep, index=pdf.index)]
-
-        out = out.mapInPandas(exact, out.schema)
+        keep = (
+            (places["maxx"] >= west) & (places["minx"] <= east)
+            & (places["maxy"] >= south) & (places["miny"] <= north)
+        ).to_numpy()
+        if geometry is not None and geometry.get("type") in ("Polygon", "MultiPolygon"):
+            lon, lat = places["lon"].to_numpy(), places["lat"].to_numpy()
+            is_point = ~np.isnan(lon)
+            keep &= ~is_point | points_in_geometry(
+                np.nan_to_num(lon), np.nan_to_num(lat), geometry
+            )
+        places = places[keep]
     if query_expr:
-        out = out.filter(F.expr(query_expr))
-    return out
+        # NaN → null, so the expression sees SQL nulls
+        rows = places.astype(object).where(places.notna(), None)
+        kept = (
+            SparkSession.active()
+            .createDataFrame(list(rows.itertuples(index=False, name=None)), SCHEMA)
+            .filter(F.expr(query_expr))
+            .collect()
+        )
+        places = pd.DataFrame(kept, columns=COLUMNS)
+    return places

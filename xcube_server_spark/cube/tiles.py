@@ -208,12 +208,13 @@ class TileService:
                     st.value_range[1] if vmax is None else vmax,
                 ),
             )
-            key = (ds_id, var, z, x, y, time, st.color_bar, st.value_range)
+            # keyed on the bound step, so 'current' follows an append
+            t_idx, label = _nearest_time(self.catalog.times(ds_id), time)
+            key = (ds_id, var, z, x, y, label, st.color_bar, st.value_range)
             cached = self._cache.get(key)
             if cached is not None:
                 return cached
             meta.require_variable(var)
-            t_idx, _ = _nearest_time(self.catalog.times(ds_id), time)
             pdf = self._read_tile_fast(ds_id, var, z, x, y, t_idx)
             if pdf is not None:
                 render = _render_pdf_factory(

@@ -36,8 +36,9 @@ set ``spark.scheduler.mode=FAIR`` for a production deployment so tile
 latency isn't starved by long analytics queries.
 
 Tiles and time series of a stored cube with local files are answered by a
-driver-side pyarrow read without a Spark job; computed and object-store
-cubes, places and oversized time-series windows run Spark plans.
+driver-side pyarrow read without a Spark job, and places by numpy masks over
+the driver-side place table; computed and object-store cubes, oversized
+time-series windows and a places ``query``/``expr`` filter run Spark plans.
 """
 
 from __future__ import annotations
@@ -427,32 +428,19 @@ class CubeServer:
             h._json(self._time_series(h, method, parts[1], parts[2], parts[3], q))
         elif method == "GET" and parts == ["places"]:
             # place-group inventory (xcube_server/context.py:297-303)
-            if self._live_places() is None:
-                h._json({"placeGroups": []})
-                return
-            from pyspark.sql import functions as F
-
-            titles = getattr(self.catalog, "place_titles", {})
-            groups = [
-                {
-                    "id": r["collection"],
-                    "title": titles.get(r["collection"], r["collection"]),
-                    "featureCount": r["n"],
-                }
-                for r in self._live_places().groupBy("collection")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .orderBy("collection")
-                .collect()
-            ]
-            h._json({"placeGroups": groups})
-        elif method in ("GET", "POST") and len(parts) in (2, 3) and parts[0] == "places":
-            if self._live_places() is None:
-                raise KeyError("no place groups configured")
             pl = self._live_places()
+            titles = getattr(self.catalog, "place_titles", {})
+            counts = {} if pl is None else pl["collection"].value_counts().sort_index()
+            h._json({"placeGroups": [
+                {"id": c, "title": titles.get(c, c), "featureCount": int(n)}
+                for c, n in counts.items()
+            ]})
+        elif method in ("GET", "POST") and len(parts) in (2, 3) and parts[0] == "places":
+            pl = self._live_places()
+            if pl is None:
+                raise KeyError("no place groups configured")
             if parts[1] != "all":
-                from pyspark.sql import functions as F
-
-                pl = pl.filter(F.col("collection") == parts[1])
+                pl = pl[pl["collection"] == parts[1]]
             if len(parts) == 3:
                 # /places/{collection}/{ds_id}: restrict to the dataset's
                 # bounds (FindDatasetPlacesHandler)
@@ -485,11 +473,11 @@ class CubeServer:
             feats = [
                 {
                     "type": "Feature",
-                    "id": r["feature_id"],
-                    "geometry": json.loads(r["geometry"]),
-                    "properties": dict(r["properties"]),
+                    "id": r.feature_id,
+                    "geometry": json.loads(r.geometry),
+                    "properties": dict(r.properties),
                 }
-                for r in out.collect()
+                for r in out.itertuples()
             ]
             h._json({"type": "FeatureCollection", "features": feats})
         else:

@@ -621,6 +621,37 @@ def test_inv_y_cube_orientation(spark, tmp_path):
     assert fast.get_tile("noise", "noise", tg.num_levels - 1, 0, 0) == png
 
 
+def test_computed_tiles_match_spark_render_inv_y(spark, tmp_path):
+    """On an ascending-lat (inv_y) cube, every tile of a weekly dataset at
+    every zoom, a full and a partial week, is the PNG of ``render_tiles``."""
+    from xcube_server_spark.cube.catalog import DatasetMeta
+    from xcube_server_spark.sources.cube_ingest import synth_noise_cube
+
+    base = str(tmp_path / "noise")
+    cube, grid = synth_noise_cube(spark, width=64, height=32, days=9)
+    _, tg = write_cube(cube, grid, base, tile_size=16)
+    cat = CubeCatalog(spark)
+    styles = {"noise": StyleMeta("gray", (0.0, 1.0))}
+    cat.register_written_cube("noise", base, grid, tg, ["noise"], styles=styles)
+    cat.register(DatasetMeta(
+        identifier="noise-1w", title="weekly", base_path="", grid=grid,
+        tile_grid=tg, variables=["noise"], styles=styles, computed=True,
+        function="resample_in_time", input_datasets=["noise"],
+        input_params={"period": "1W"},
+    ))
+    # Jan 1-6 (6 steps) and Jan 7-9 (3 steps)
+    assert cat.times("noise-1w") == ["2019-01-06 00:00:00", "2019-01-13 00:00:00"]
+    svc = TileService(cat)
+    for week in cat.times("noise-1w"):
+        for z in range(tg.num_levels):
+            rows = render_tiles(cat, "noise-1w", "noise", z, time=week).collect()
+            assert rows
+            for r in rows:
+                x, y = r["tile_x"], r["tile_y"]
+                got = svc.get_tile("noise-1w", "noise", z, x, y, time=week)
+                assert got == bytes(r["png"]), (week, z, x, y)
+
+
 def test_feature_info_inv_y_coarser_zoom(spark, tmp_path):
     """GetFeatureInfo on an ascending-lat (inv_y) cube below native zoom:
     lon/lat are the centre of that level's cell, and the value is the cell

@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from xcube_server_spark.cube.catalog import CubeCatalog, DatasetMeta, StyleMeta
-from xcube_server_spark.cube.tiles import TileService
+from xcube_server_spark.cube.tiles import TileService, render_tiles
 from xcube_server_spark.sources.cube_ingest import (
     DEMO_TIMES,
     synth_demo_cube,
@@ -168,6 +168,62 @@ def test_weekly_dataset_over_appended_cube_serves_new_weeks(spark, split_cubes):
     for time in ("current", "2017-01-29"):
         assert TileService(cat).get_tile("inc-1w", "kd489", 0, 0, 0, time=time) \
             == TileService(full).get_tile("full-1w", "kd489", 0, 0, 0, time=time)
+
+
+def _weekly_catalog(spark, base, grid, tg) -> CubeCatalog:
+    cat = CubeCatalog(spark)
+    cat.save_meta(cat.register_written_cube("inc", base, grid, tg, VARS))
+    cat.register(DatasetMeta(
+        identifier="inc-1w", title="weekly", base_path="", grid=grid,
+        tile_grid=tg, variables=VARS, computed=True,
+        function="resample_in_time", input_datasets=["inc"],
+        input_params={"period": "1W"},
+    ))
+    return cat
+
+
+def _append(spark, cat, base_inc, tail_path, tg) -> None:
+    CubeLevelAppendSink(base_inc, tg.num_levels)(
+        spark.read.parquet(tail_path), batch_id=0
+    )
+    register_appended_slices(cat, "inc", list(DEMO_TIMES[3:]))
+
+
+def test_live_tile_service_serves_grown_week_after_append(spark, split_cubes):
+    """A live service that cached the tile of a weekly step serves its new
+    tile once an append adds an input step to that week: the week keeps its
+    label, but the step's source changed."""
+    _, base_inc, tail_path, _grid, grid_head, tg = split_cubes
+    cat = _weekly_catalog(spark, base_inc, grid_head, tg)
+    svc = TileService(cat)
+    before = svc.get_tile("inc-1w", "kd489", 0, 0, 0, time="2017-01-29")
+
+    _append(spark, cat, base_inc, tail_path, tg)
+
+    after = svc.get_tile("inc-1w", "kd489", 0, 0, 0, time="2017-01-29")
+    assert after == TileService(cat).get_tile("inc-1w", "kd489", 0, 0, 0, time="2017-01-29")
+    assert after != before
+
+
+def test_weekly_tiles_match_spark_render_across_an_append(spark, split_cubes):
+    """Every tile of every week at every zoom that a live service serves of
+    a weekly dataset is the PNG of ``render_tiles``, before an append (the
+    Jan 29 week partial, with one all-NULL conc_tsm step) and after it (the
+    week grown by a second all-NULL step, and a new week)."""
+    _, base_inc, tail_path, _grid, grid_head, tg = split_cubes
+    cat = _weekly_catalog(spark, base_inc, grid_head, tg)
+    svc = TileService(cat)
+    for phase in ("before", "after"):
+        if phase == "after":
+            _append(spark, cat, base_inc, tail_path, tg)
+        for week in cat.times("inc-1w"):
+            for z in range(tg.num_levels):
+                rows = render_tiles(cat, "inc-1w", "conc_tsm", z, time=week).collect()
+                assert rows
+                for r in rows:
+                    x, y = r["tile_x"], r["tile_y"]
+                    got = svc.get_tile("inc-1w", "conc_tsm", z, x, y, time=week)
+                    assert got == bytes(r["png"]), (phase, week, z, x, y)
 
 
 def test_append_sink_replay_is_exactly_once(spark, split_cubes):

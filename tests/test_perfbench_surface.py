@@ -16,7 +16,7 @@ import inspect
 import pandas as pd
 import pytest
 
-from xcube_server_spark.cube import cache, tiles, timeseries
+from xcube_server_spark.cube import cache, catalog as catalog_mod, tiles, timeseries
 from xcube_server_spark.cube.catalog import CubeCatalog, DatasetMeta, StyleMeta
 from xcube_server_spark.server import app
 from xcube_server_spark.sources.cube_ingest import synth_demo_cube, write_cube
@@ -45,7 +45,7 @@ def catalog(spark, tmp_path_factory):
     return cat
 
 
-def test_tile_service_surface(catalog):
+def test_tile_service_surface(catalog, monkeypatch):
     svc = tiles.TileService(catalog)
     assert isinstance(svc._cache, cache.ByteCache)
     # the benchmark's cache reset: built with the capacity alone
@@ -55,12 +55,16 @@ def test_tile_service_surface(catalog):
     assert len(svc._cache) == 1 and svc._cache._used == len(png)
     pdf = svc._read_tile_fast("demo", "conc_chl", 0, 0, 0, 0)
     assert isinstance(pdf, pd.DataFrame) and len(pdf) > 0
-    assert svc._read_tile_fast("demo-1w", "conc_chl", 0, 0, 0, 0) is None
+    # None when the driver read declines, here over its row budget
+    monkeypatch.setattr(catalog_mod, "WINDOW_ROW_BUDGET", 0)
+    assert svc._read_tile_fast("demo", "conc_chl", 0, 0, 0, 0) is None
 
 
 def test_entry_points_looked_up_by_module(catalog, monkeypatch):
     """A tile miss calls the colormap, PNG and Spark-render steps through
-    ``tiles``' module globals, where the tracer replaces them."""
+    ``tiles``' module globals, where the tracer replaces them: a computed
+    dataset's miss renders on the driver, a read the driver read declines
+    (here over its row budget) through ``render_tiles``."""
     calls = []
 
     def spy(name):
@@ -78,15 +82,18 @@ def test_entry_points_looked_up_by_module(catalog, monkeypatch):
     svc.get_tile("demo", "conc_chl", 0, 0, 0)
     assert calls == ["apply_cmap", "encode_rgba_png"]
     svc.get_tile("demo-1w", "conc_chl", 0, 0, 0)
-    assert calls[2:] == ["render_tiles"]
+    assert calls[2:] == ["apply_cmap", "encode_rgba_png"]
+    monkeypatch.setattr(catalog_mod, "WINDOW_ROW_BUDGET", 0)
+    svc.get_tile("demo", "conc_chl", 1, 0, 0)
+    assert calls[4:] == ["render_tiles"]
 
 
 def test_time_series_entry_points_looked_up_by_module(catalog, monkeypatch):
     """A time-series request rasterizes through ``timeseries``' module
     global ``rasterize_mask`` (the tracer's ``rasterize.mask`` span) on the
-    driver read, and runs a Spark plan through ``app``'s globals
-    ``time_series_for_*`` (its ``plan.ts`` span) when the driver read
-    declines, here for a computed dataset."""
+    driver read, for a stored and a computed dataset, and runs a Spark plan
+    through ``app``'s globals ``time_series_for_*`` (its ``plan.ts`` span)
+    when the driver read declines, here over its row budget."""
     import json
     import urllib.request
 
@@ -132,6 +139,12 @@ def test_time_series_entry_points_looked_up_by_module(catalog, monkeypatch):
         ask("demo-1w", "point")
         ask("demo-1w", "geometry", polygon)
         ask("demo-1w", "geometries", {"geometries": [polygon]})
+        assert calls == ["rasterize_mask", "rasterize_mask"]
+        del calls[:]
+        monkeypatch.setattr(catalog_mod, "WINDOW_ROW_BUDGET", 0)
+        ask("demo", "point")
+        ask("demo", "geometry", polygon)
+        ask("demo", "geometries", {"geometries": [polygon]})
     finally:
         server.stop()
         server.httpd.server_close()

@@ -190,36 +190,6 @@ def test_timeseries_groupby_partial_agg(spark, sf_dir):
     assert plan.count("HashAggregate") >= 2  # partial + final
 
 
-def test_bucketed_join_no_shuffle(spark, sf_dir, tmp_path):
-    """Identically-bucketed tables join with ZERO exchanges (co-located
-    sort-merge join) — the write-once/join-many layout contract."""
-    from xcube_server_spark.sources.bucketing import colocated_join, write_bucketed
-
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    write_bucketed(
-        orders.withColumnRenamed("o_orderkey", "okey"), "orders_b", ["okey"], 8
-    )
-    write_bucketed(
-        li.withColumnRenamed("l_orderkey", "okey"), "lineitem_b", ["okey"], 8
-    )
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        from xcube_server_spark.plans.explain import executed_plan
-
-        join_df = colocated_join(spark, "orders_b", "lineitem_b", ["okey"])
-        assert count_exchanges(join_df) == 0, executed_plan(join_df)
-        assert "SortMergeJoin" in executed_plan(join_df)
-        # sanity: result matches a plain join
-        plain = orders.join(li, orders.o_orderkey == li.l_orderkey).count()
-        assert join_df.count() == plain
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS orders_b")
-        spark.sql("DROP TABLE IF EXISTS lineitem_b")
-
-
 def test_q7_single_fact_fact_shuffle(spark, sf_dir):
     """q7: lineitem⋈orders is the only shuffle pair; supplier/customer/nation
     all broadcast. Exchanges: 2 shuffle inputs (one per fact side) + the

@@ -678,9 +678,10 @@ def test_ts_inv_y_grid_matches_spark_plan(server, cube_server, spark, tmp_path):
 def test_ts_spark_plan_answers_what_the_driver_read_declines(
     server, cube_server, monkeypatch
 ):
-    """A computed dataset, and a window over the driver read's row budget,
-    still run the route's Spark plan."""
-    from xcube_server_spark.cube import timeseries
+    """A window over the driver read's row budget still runs the route's
+    Spark plan, for a stored and a computed dataset; a computed dataset
+    within the budget is answered by the driver read, with no job."""
+    from xcube_server_spark.cube import catalog
     from xcube_server_spark.cube.catalog import DatasetMeta
 
     cat = cube_server.catalog
@@ -698,18 +699,20 @@ def test_ts_spark_plan_answers_what_the_driver_read_declines(
         assert status == 200 and got["results"]
         _assert_same_answer(got, _spark_answer(
             cat, "demo-1w-ts", "conc_chl", "point", lon=2.1, lat=51.4))
-        assert _jobs(cat, "ts-computed")
+        assert _jobs(cat, "ts-computed") == []
+        monkeypatch.setattr(catalog, "WINDOW_ROW_BUDGET", 100)
+        for ds in ("demo", "demo-1w-ts"):
+            for op, body in (
+                ("geometry", _polygon(_INSIDE)),
+                ("geometries", {"geometries": [_polygon(_INSIDE), _polygon(_PARTLY)]}),
+            ):
+                rid = f"ts-budget-{ds}-{op}"
+                status, got = _ts_request(f"{server}/ts/{ds}/conc_chl/{op}", body, rid)
+                assert status == 200
+                _assert_same_answer(got, _spark_answer(cat, ds, "conc_chl", op, body))
+                assert _jobs(cat, rid)
     finally:
         del cat.datasets["demo-1w-ts"]
-    monkeypatch.setattr(timeseries, "WINDOW_ROW_BUDGET", 100)
-    for op, body in (
-        ("geometry", _polygon(_INSIDE)),
-        ("geometries", {"geometries": [_polygon(_INSIDE), _polygon(_PARTLY)]}),
-    ):
-        status, got = _ts_request(f"{server}/ts/demo/conc_chl/{op}", body, f"ts-budget-{op}")
-        assert status == 200
-        _assert_same_answer(got, _spark_answer(cat, "demo", "conc_chl", op, body))
-        assert _jobs(cat, f"ts-budget-{op}")
     # a window within the budget still reads on the driver
     status, _ = _ts_request(
         f"{server}/ts/demo/conc_chl/point?lon=2.1&lat=51.4", rid="ts-budget-point"
@@ -745,23 +748,17 @@ def test_pooled_worker_tags_every_request(cube_server, monkeypatch):
     import socket
     import time
 
-    from xcube_server_spark.cube.catalog import DatasetMeta
+    from xcube_server_spark.cube import catalog
     from xcube_server_spark.server import app
 
     monkeypatch.setattr(app, "REQUEST_THREADS", 1)
     monkeypatch.setattr(app, "REQUEST_TIMEOUT_S", 1)
-    # a point series of a computed dataset runs the Spark plan
-    base = cube_server.catalog.datasets["demo"]
-    cube_server.catalog.register(DatasetMeta(
-        identifier="demo-1w-pool", title="weekly", base_path="", grid=base.grid,
-        tile_grid=base.tile_grid, variables=base.variables, computed=True,
-        function="resample_in_time", input_datasets=["demo"],
-        input_params={"period": "1W"},
-    ))
+    # over the driver read's row budget, a point series runs the Spark plan
+    monkeypatch.setattr(catalog, "WINDOW_ROW_BUDGET", 0)
     srv = CubeServer(cube_server.catalog, places=cube_server.places)
     srv.start()
     try:
-        url = f"http://127.0.0.1:{srv.port}/ts/demo-1w-pool/conc_chl/point?lon=2.1&lat=51.4"
+        url = f"http://127.0.0.1:{srv.port}/ts/demo/conc_chl/point?lon=2.1&lat=51.4"
         for rid in ("pool-a", "pool-b"):
             status, doc = _ts_request(url, rid=rid)
             assert status == 200 and doc["results"]
@@ -777,7 +774,6 @@ def test_pooled_worker_tags_every_request(cube_server, monkeypatch):
     finally:
         srv.stop()
         srv.httpd.server_close()
-        del cube_server.catalog.datasets["demo-1w-pool"]
 
 
 def test_places_routes_launch_no_job(server, cube_server):
@@ -851,8 +847,8 @@ def test_wmts_get_feature_info(server):
 
 
 def test_wmts_get_feature_info_computed_dataset(server, cube_server):
-    """GetFeatureInfo on a computed dataset (no store of its own) reads the
-    cell from the computed frame."""
+    """GetFeatureInfo on a computed dataset (no store of its own) answers
+    the cell of the computed frame."""
     from pyspark.sql import functions as F
 
     from xcube_server_spark.cube.catalog import DatasetMeta
@@ -897,6 +893,97 @@ def test_wmts_get_feature_info_computed_dataset(server, cube_server):
         assert abs(doc["value"] - expected) < 1e-9
     finally:
         del cat.datasets["demo-1w"]
+
+
+def test_computed_dataset_reads_match_spark_without_a_job(server, cube_server):
+    """A computed dataset is served by the driver read: its tiles at every
+    zoom are the PNG bytes of ``render_tiles``, its ``GetFeatureInfo``
+    values and the rows of all four ``/ts`` routes are those of the Spark
+    plans, and none of these requests launches a Spark job."""
+    from pyspark.sql import functions as F
+
+    from xcube_server_spark.cube.catalog import DatasetMeta
+    from xcube_server_spark.cube.tiles import render_tiles
+
+    cat = cube_server.catalog
+    base = cat.datasets["demo"]
+    tg = base.tile_grid
+    cat.register(DatasetMeta(
+        identifier="demo-1w-reads", title="weekly", base_path="",
+        grid=base.grid, tile_grid=tg, variables=base.variables,
+        styles=base.styles, computed=True, function="resample_in_time",
+        input_datasets=["demo"], input_params={"period": "1W"},
+    ))
+
+    def get(path, rid):
+        req = urllib.request.Request(f"{server}/{path}", headers={"X-Request-Id": rid})
+        with urllib.request.urlopen(req, timeout=120) as r:
+            assert r.status == 200, path
+            return r.read()
+
+    try:
+        weeks = cat.times("demo-1w-reads")
+        # conc_tsm: the Jan 29 week holds a valid and two all-NULL steps
+        for var in ("conc_tsm", "kd489"):
+            for t, week in enumerate(weeks):
+                for z in range(tg.num_levels):
+                    want = {
+                        (r["tile_x"], r["tile_y"]): bytes(r["png"])
+                        for r in render_tiles(cat, "demo-1w-reads", var, z, time=week).collect()
+                    }
+                    assert want
+                    for (x, y), png in want.items():
+                        rid = f"computed-tile-{var}-{t}-{z}-{x}-{y}"
+                        got = get(f"datasets/demo-1w-reads/vars/{var}/tiles/{z}/{x}/{y}.png"
+                                  f"?time={week.replace(' ', 'T')}", rid)
+                        assert got == png, (var, week, z, x, y)
+                        assert _jobs(cat, rid) == [], rid
+                for z, (i, j) in ((1, (5, 7)), (0, (20, 3))):
+                    rid = f"computed-gfi-{var}-{t}-{z}"
+                    doc = json.loads(get(
+                        "wmts/kvp?Service=WMTS&Request=GetFeatureInfo"
+                        f"&Layer=demo-1w-reads.{var}&TileMatrix={z}&TileCol=0"
+                        f"&TileRow=0&I={i}&J={j}&Time={week.replace(' ', 'T')}", rid))
+                    assert _jobs(cat, rid) == [], rid
+                    level = tg.level_for_zoom(z)
+                    (want,) = (
+                        cat.cube("demo-1w-reads", level, t)
+                        .filter((F.col("lat_idx") == j) & (F.col("lon_idx") == i))
+                        .select(var).first()
+                    )
+                    assert doc["time"] == week and doc["value"] == want, (var, t, z)
+        collection = {"type": "GeometryCollection", "geometries": [
+            {"type": "Point", "coordinates": [2.1, 51.4]},
+            _polygon(_INSIDE), _polygon(_PARTLY), _polygon(_OUTSIDE),
+        ]}
+        features = {"type": "FeatureCollection", "features": [
+            {"type": "Feature", "properties": {}, "geometry": g}
+            for g in collection["geometries"]
+        ]}
+        for k, (var, op, query, body, bounds) in enumerate([
+            ("conc_tsm", "point", "lon=2.1&lat=51.4", None, {}),
+            ("kd489", "point", "lon=4.96&lat=50.01&startDate=2017-01-29", None,
+             {"start": "2017-01-29 00:00:00"}),
+            ("conc_tsm", "geometry", "", _polygon(_INSIDE), {}),
+            ("conc_chl", "geometry", "endDate=2017-01-29", _polygon(_PARTLY),
+             {"end": "2017-01-29 00:00:00"}),
+            ("conc_tsm", "geometries", "", collection, {}),
+            ("kd489", "places", "", features, {}),
+        ]):
+            rid = f"computed-ts-{k}"
+            status, got = _ts_request(
+                f"{server}/ts/demo-1w-reads/{var}/{op}?{query}", body, rid
+            )
+            assert status == 200 and got["results"], (k, got)
+            point = {}
+            if op == "point":
+                lon, lat = (float(kv.split("=")[1]) for kv in query.split("&")[:2])
+                point = {"lon": lon, "lat": lat}
+            _assert_same_answer(got, _spark_answer(
+                cat, "demo-1w-reads", var, op, body, **bounds, **point))
+            assert _jobs(cat, rid) == [], (k, op)
+    finally:
+        del cat.datasets["demo-1w-reads"]
 
 
 def test_metadata_routes_run_no_spark_job_for_a_computed_dataset(

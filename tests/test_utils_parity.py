@@ -189,6 +189,45 @@ def test_config_hot_reload(spark, tmp_path):
             assert cat.places is None and cat.place_titles == {}
 
 
+def test_config_reload_repoints_served_tiles(spark, tmp_path):
+    """A config reload that points dataset ``d`` at another cube with the
+    same time labels: the live tile service serves the new cube's tile, not
+    the one it cached before the reload."""
+    import os
+    import time
+
+    from pyspark.sql import functions as F
+
+    from xcube_server_spark.cube.catalog import ConfigWatcher, CubeCatalog
+    from xcube_server_spark.cube.tiles import TileService
+    from xcube_server_spark.sources.cube_ingest import synth_demo_cube, write_cube
+
+    cube, grid = synth_demo_cube(spark, width=20, height=10)
+    paths = []
+    for name, scale in (("first", 1.0), ("second", 0.5)):
+        base = str(tmp_path / name)
+        scaled = cube.withColumn("conc_chl", (F.col("conc_chl") * scale).cast("float"))
+        _, tg = write_cube(scaled, grid, base, tile_size=8)
+        cat = CubeCatalog(spark)
+        cat.save_meta(cat.register_written_cube("d", base, grid, tg, ["conc_chl"]))
+        paths.append(base)
+    cfg = tmp_path / "config.yml"
+    cfg.write_text(f"Datasets:\n  - Identifier: d\n    Path: {paths[0]}\n")
+    watcher = ConfigWatcher(CubeCatalog(spark), str(cfg))
+    svc = TileService(watcher.catalog)
+
+    def tile(service):
+        return service.get_tile("d", "conc_chl", 0, 0, 0, vmin=0.0, vmax=30.0)
+
+    before = tile(svc)
+    cfg.write_text(f"Datasets:\n  - Identifier: d\n    Path: {paths[1]}\n")
+    os.utime(cfg, (time.time() + 2, time.time() + 2))
+    assert watcher.maybe_reload()
+    after = tile(svc)
+    assert after == tile(TileService(watcher.catalog))
+    assert after != before
+
+
 def test_cli_parser():
     from xcube_server_spark.cli import make_parser
 

@@ -21,14 +21,19 @@ import json
 import os
 from dataclasses import dataclass, field
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.paths import join_store_path, open_store_text
-from .computed import apply_computed, step_table
+from .computed import Step, apply_computed, get_transform, step_table
 from .grid import GridMeta, IndexWindow, TileGridMeta
 from .places import load_place_group, union_place_groups
+
+# Most rows (window cells x steps read) a driver read may load, about 20 MB
+# of columns; larger reads run the Spark plan.
+WINDOW_ROW_BUDGET = 1_000_000
 
 _RAW_SUFFIXES = (".zarr", ".levels", ".nc", ".nc4", ".h5", ".hdf5", ".tif", ".tiff")
 
@@ -112,6 +117,29 @@ def window_filter(windows: list[IndexWindow]) -> Column:
         )
         filt = box if filt is None else filt | box
     return filt
+
+
+def level_table(base_path: str, level: int) -> str:
+    """Table path of one LOD level of the cube at ``base_path``, following a
+    ``l{level}.link`` pointer file if present — parity with the reference's
+    ``FileStorageMultiLevelDataset`` ``{i}.link`` indirection
+    (``xcube_server/mldataset.py:136-198``): the link file's text is an
+    external table path (absolute / URI), or a path relative to the
+    dataset directory. Hand-assembled pyramids use this to graft a level
+    stored elsewhere without copying it."""
+    direct = join_store_path(base_path, f"l{level}")
+    try:
+        with open_store_text(join_store_path(base_path, f"l{level}.link")) as f:
+            target = f.read().strip()
+    except (OSError, NotImplementedError):
+        # no link file, or a non-local store whose sidecars we can't read
+        # driver-side — serve the direct level table
+        return direct
+    if not target:
+        return direct
+    if "://" not in target and not os.path.isabs(target):
+        target = join_store_path(base_path, target)
+    return target
 
 
 class CubeCatalog:
@@ -223,29 +251,29 @@ class CubeCatalog:
     # -- access -------------------------------------------------------------
 
     def level_path(self, identifier: str, level: int) -> str:
-        """Table path of one LOD level, following a ``l{level}.link``
-        pointer file if present — parity with the reference's
-        ``FileStorageMultiLevelDataset`` ``{i}.link`` indirection
-        (``xcube_server/mldataset.py:136-198``): the link file's text is an
-        external table path (absolute / URI), or a path relative to the
-        dataset directory. Hand-assembled pyramids use this to graft a
-        level stored elsewhere without copying it."""
+        """Table path of one LOD level of a stored dataset
+        (``level_table``)."""
+        return level_table(self.datasets[identifier].base_path, level)
+
+    def step_sources(
+        self, identifier: str, steps: list[int] | None = None
+    ) -> tuple[tuple[str, ...], list[Step]]:
+        """Where ``steps`` (every step when None) of a dataset are read
+        from: the base paths of the stored datasets read (the dataset
+        itself, or a computed dataset's inputs) and, per step, its label and
+        the ``time_idx`` list read from them (a computed step's list from
+        its step table). ``read_windows`` reads exactly this, so a key made
+        from it names the source of the bytes."""
         meta = self.datasets[identifier]
-        direct = join_store_path(meta.base_path, f"l{level}")
-        try:
-            with open_store_text(
-                join_store_path(meta.base_path, f"l{level}.link")
-            ) as f:
-                target = f.read().strip()
-        except (OSError, NotImplementedError):
-            # no link file, or a non-local store whose sidecars we can't
-            # read driver-side — serve the direct level table
-            return direct
-        if not target:
-            return direct
-        if "://" not in target and not os.path.isabs(target):
-            target = join_store_path(meta.base_path, target)
-        return target
+        if meta.computed:
+            table = step_table(self, meta)
+            inputs = meta.input_datasets
+        else:
+            table = [(t, [k]) for k, t in enumerate(meta.grid.times)]
+            inputs = [identifier]
+        bases = tuple(self.datasets[d].base_path for d in inputs)
+        wanted = range(len(table)) if steps is None else steps
+        return bases, [table[k] for k in wanted]
 
     def read_windows(
         self,
@@ -253,32 +281,34 @@ class CubeCatalog:
         columns: list[str],
         windows: list[IndexWindow],
         level: int = 0,
-        t_idx: int | None = None,
+        steps: list[int] | None = None,
     ) -> "pyarrow.Table | None":
-        """Driver-side pyarrow read of the rows in any of ``windows``: a
-        window ``((i0, i1), (j0, j1))`` holds the cells
-        ``i0 <= lat_idx < i1``, ``j0 <= lon_idx < j1``. Reads time step
-        ``t_idx``, or every step when it is None. Partition-dir pruning on
-        time_idx, then row-group predicate pruning on the indices.
+        """Driver-side pyarrow read of the rows in any of ``windows`` at
+        ``steps`` (every step when None): a window ``((i0, i1), (j0, j1))``
+        holds the cells ``i0 <= lat_idx < i1``, ``j0 <= lon_idx < j1``.
+        Partition-dir pruning on time_idx, then row-group predicate pruning
+        on the indices.
+
+        A computed step reads its input steps (``step_sources``), tags their
+        rows with the step's ``time`` and applies the transform's driver
+        reduction, so it answers with the rows the Spark plan computes.
 
         This is the one local read of the serving path (tiles,
-        ``GetFeatureInfo``, time series). None when the level has no local
-        files to read (computed or object-store datasets): callers then
-        answer with a Spark plan."""
+        ``GetFeatureInfo``, time series). None when it declines: no local
+        files to read (object-store datasets), or more than
+        ``WINDOW_ROW_BUDGET`` rows (window cells x steps read, for a
+        computed dataset its input steps). Callers then answer with a Spark
+        plan."""
+        import pyarrow as pa
         import pyarrow.dataset as pads
 
         from ..sources.paths import local_part_glob
 
         meta = self.datasets[identifier]
-        if meta.computed or not meta.base_path:
-            return None
-        # level_path follows a `.link` pointer, so grafted levels keep the
-        # driver read as long as the target is a local table.
-        step = "*" if t_idx is None else t_idx
-        parts = local_part_glob(
-            f"{self.level_path(identifier, level)}/time_idx={step}"
-        )
-        if not parts:
+        bases, table = self.step_sources(identifier, steps)
+        cells = sum((i1 - i0) * (j1 - j0) for (i0, i1), (j0, j1) in windows)
+        read = len(bases) * sum(len(idx) for _, idx in table)
+        if not all(bases) or cells * read > WINDOW_ROW_BUDGET:
             return None
         f = pads.field
         filt = None
@@ -288,10 +318,38 @@ class CubeCatalog:
                 & (f("lon_idx") >= j0) & (f("lon_idx") < j1)
             )
             filt = box if filt is None else filt | box
-        source = os.path.dirname(parts[0]) if t_idx is None else parts[0]
-        return pads.dataset(source, format="parquet").to_table(
-            columns=columns, filter=filt
-        )
+        if meta.computed:
+            keys = ["time", "lat_idx", "lon_idx"]
+            read_cols = keys[1:] + [c for c in columns if c not in keys]
+        else:
+            read_cols = columns
+        inputs = []
+        for base in bases:
+            # level_table follows a `.link` pointer, so grafted levels
+            # keep the driver read as long as the target is a local table.
+            level_dir = level_table(base, level)
+            parts = []
+            for label, idx in table:
+                dirs = [
+                    d for i in idx
+                    for d in local_part_glob(f"{level_dir}/time_idx={i}")
+                ]
+                if not dirs:
+                    continue
+                part = pads.dataset(
+                    [pads.dataset(d, format="parquet") for d in dirs]
+                ).to_table(columns=read_cols, filter=filt)
+                if meta.computed:
+                    when = pa.scalar(np.datetime64(label, "us"))
+                    part = part.append_column("time", pa.repeat(when, len(part)))
+                parts.append(part)
+            if not parts:
+                return None
+            inputs.append(pa.concat_tables(parts))
+        if not meta.computed:
+            return inputs[0]
+        _, _, reduce = get_transform(meta.function)
+        return reduce(*inputs, **meta.input_params).select(columns)
 
     def cube(
         self, identifier: str, level: int = 0, t_idx: int | None = None

@@ -3,17 +3,26 @@
 Reference: ``FileSystem: memory`` datasets ``exec()`` a user Python script
 and call its ``Function`` with ``InputDatasets`` + ``InputParameters``
 (``xcube_server/mldataset.py:308-382``; the raw ``exec`` at ``:333``).
-Deliberate divergence: no ``exec``. A transform is a registered named pair:
+Deliberate divergence: no ``exec``. A transform is a registered named
+triple:
 
 - ``steps(input_times, **params) -> [(label, [input time_idx, ...]), ...]``:
   output step ``k`` is labelled ``label`` (``YYYY-MM-DD HH:MM:SS``) and
   made from those steps of the first input's axis. This step table, worked
   out on the driver, is also the dataset's time axis (``CubeCatalog.times``).
-- ``body(*inputs, **params) -> DataFrame``: each input arrives cut to the
-  wanted steps' ``time_idx`` partitions and tagged with the output
-  ``time_idx`` and ``time``; the body groups by those and the cell. So one
-  output step prunes the input partitions, and a tile box reaches the input
-  scan through the body's aggregate on the cell indices.
+- ``body(*inputs, **params) -> DataFrame``: the Spark plan. Each input
+  arrives cut to the wanted steps' ``time_idx`` partitions and tagged with
+  the output ``time_idx`` and ``time``; the body groups by those and the
+  cell. So one output step prunes the input partitions, and a tile box
+  reaches the input scan through the body's aggregate on the cell indices.
+  It is the batch plan (``render_tiles``), the test oracle, and the answer
+  to a read that the driver read declines.
+- ``reduce(*tables, **params) -> pyarrow.Table``: the same computation on
+  the driver, over ``CubeCatalog.read_windows``' rows of the input steps
+  tagged with their output step's ``time``; it groups by ``time`` and the
+  cell. Like the reference's ``ComputedMultiLevelDataset``, a computed
+  dataset is then served by the same in-process tile and time-series code
+  as a stored one.
 """
 
 from __future__ import annotations
@@ -22,6 +31,7 @@ import datetime as _dt
 from collections.abc import Callable
 from typing import TYPE_CHECKING
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -29,24 +39,29 @@ if TYPE_CHECKING:  # pragma: no cover
     from .catalog import CubeCatalog, DatasetMeta
 
 Step = tuple[str, list[int]]
-Transform = tuple[Callable[..., list[Step]], Callable[..., DataFrame]]
+Transform = tuple[
+    Callable[..., list[Step]], Callable[..., DataFrame], Callable[..., pa.Table]
+]
 
 _REGISTRY: dict[str, Transform] = {}
 
 
 def register_transform(
-    name: str, steps: Callable[..., list[Step]], body: Callable[..., DataFrame]
+    name: str,
+    steps: Callable[..., list[Step]],
+    body: Callable[..., DataFrame],
+    reduce: Callable[..., pa.Table],
 ) -> None:
-    _REGISTRY[name] = (steps, body)
+    _REGISTRY[name] = (steps, body, reduce)
 
 
 def get_transform(name: str) -> Transform:
-    """The ``(steps, body)`` pair registered as ``name``."""
+    """The ``(steps, body, reduce)`` triple registered as ``name``."""
     return _REGISTRY[name]
 
 
 def step_table(catalog: "CubeCatalog", meta: "DatasetMeta") -> list[Step]:
-    steps, _ = get_transform(meta.function)
+    steps, _, _ = get_transform(meta.function)
     return steps(catalog.times(meta.input_datasets[0]), **meta.input_params)
 
 
@@ -69,7 +84,7 @@ def apply_computed(
         .withColumns({"time_idx": idx, "time": F.to_timestamp(label)})
         for ds_id in meta.input_datasets
     ]
-    _, body = get_transform(meta.function)
+    _, body, _ = get_transform(meta.function)
     return body(*inputs, **meta.input_params)
 
 
@@ -103,4 +118,21 @@ def resample_in_time(cube: DataFrame, period: str = "1W") -> DataFrame:
     ])
 
 
-register_transform("resample_in_time", weekly_steps, resample_in_time)
+def resample_in_time_table(table: pa.Table, period: str = "1W") -> pa.Table:
+    """``resample_in_time`` on the driver. pyarrow's hash mean skips nulls,
+    propagates NaN, is null for an all-null group and accumulates in
+    double: what ``F.avg(c).cast("float")`` does."""
+    keys = ["time", "lat_idx", "lon_idx"]
+    values = [c for c in table.column_names if c not in keys]
+    out = table.group_by(keys, use_threads=False).aggregate(
+        [(c, "mean") for c in values]
+    )
+    return pa.table({
+        **{k: out[k] for k in keys},
+        **{c: out[f"{c}_mean"].cast(pa.float32()) for c in values},
+    })
+
+
+register_transform(
+    "resample_in_time", weekly_steps, resample_in_time, resample_in_time_table
+)

@@ -2,21 +2,23 @@
 
 Reference pipeline per tile: slice window → mask → clip/normalize → colormap
 → PNG (``xcube_server/controllers/tiles.py:23-142``; the fused mode-1 kernel
-``xcube_server/im/tiledimage.py:514-635``). Spark plan:
+``xcube_server/im/tiledimage.py:514-635``).
 
-1. driver: zoom → LOD level (P2), nearest time slice (P6) from catalog
-   metadata, tile (x, y) → storage index window (``grid.tile_window``);
-2. executors: window filter (``catalog.window_filter``, pushed to parquet
-   row-group pruning) →
-   ``applyInPandas`` render — ONE fused Python stage per tile, the moral
-   equivalent of the reference's fused numba kernel (T5), emitting PNG bytes
-   (S9, pure-python encoder);
-3. app layer: byte cache keyed (ds, var, z, x, y, t, style) (T9) — Spark
-   caches frames, not encoded bytes.
+``TileService`` serves one tile: zoom → LOD level (P2), nearest time step
+(P6) from catalog metadata, tile (x, y) → storage index window
+(``grid.tile_window``), then the driver read of that window
+(``CubeCatalog.read_windows``, stored and computed datasets alike) and ONE
+fused render, the moral equivalent of the reference's fused numba kernel
+(T5), emitting PNG bytes (S9, pure-python encoder). A byte cache (T9) keyed
+on the step's source sits in front.
 
-``render_tiles`` is the scalable batch form: ALL tiles of a zoom level in
-one job, grouped by (tile_y, tile_x) — this is how a pre-warm/export job
-renders millions of tiles without per-tile job overhead.
+``render_tiles`` is the Spark plan of the same render and the scalable
+batch form: ALL tiles of a zoom level in one job, window filter
+(``catalog.window_filter``, pushed to parquet row-group pruning), then an
+``applyInPandas`` render grouped by (tile_y, tile_x) — this is how a
+pre-warm/export job renders millions of tiles without per-tile job
+overhead. A single tile renders through it only when the driver read
+declines.
 """
 
 from __future__ import annotations
@@ -142,13 +144,17 @@ class TileService:
     cache (``xcube_server/context.py:80-93``): Spark jobs have ~100 ms
     overhead, so repeated tile hits must not touch Spark at all.
 
-    A miss reads its window where the dataset lives. A stored cube on a
-    local disk is read with pyarrow on the driver
-    (``CubeCatalog.read_windows``: one ``time_idx`` partition, row-group
-    pruning on the cell indices) in milliseconds — the latency class of the
-    reference's in-process dask reads. A computed cube,
-    or one in an object store, has no local files, and renders through the
-    distributed ``render_tiles`` plan instead.
+    A miss reads its window with pyarrow on the driver
+    (``CubeCatalog.read_windows``: the step's ``time_idx`` partitions,
+    row-group pruning on the cell indices) in milliseconds — the latency
+    class of the reference's in-process dask reads. When that read declines
+    (a cube in an object store), the tile renders through the distributed
+    ``render_tiles`` plan instead.
+
+    The cache key names the step's source, not its label: the base paths
+    and ``time_idx`` list that ``CubeCatalog.step_sources`` gives for the
+    bound step. A week that gains input steps in an append, or a dataset
+    that a config reload points at another cube, so misses its old tiles.
     """
 
     def __init__(
@@ -171,7 +177,7 @@ class TileService:
         meta = self.catalog.datasets[ds_id]
         level, window = tile_window(meta.grid, meta.tile_grid, z, x, y)
         table = self.catalog.read_windows(
-            ds_id, ["lat_idx", "lon_idx", var], [window], level, t_idx
+            ds_id, ["lat_idx", "lon_idx", var], [window], level, [t_idx]
         )
         if table is None:
             return None
@@ -208,9 +214,12 @@ class TileService:
                     st.value_range[1] if vmax is None else vmax,
                 ),
             )
-            # keyed on the bound step, so 'current' follows an append
-            t_idx, label = _nearest_time(self.catalog.times(ds_id), time)
-            key = (ds_id, var, z, x, y, label, st.color_bar, st.value_range)
+            t_idx, _ = _nearest_time(self.catalog.times(ds_id), time)
+            bases, [(_, idx)] = self.catalog.step_sources(ds_id, [t_idx])
+            key = (
+                ds_id, var, z, x, y, bases, tuple(idx),
+                st.color_bar, st.value_range,
+            )
             cached = self._cache.get(key)
             if cached is not None:
                 return cached
@@ -260,9 +269,9 @@ class TileService:
         Pixel → cell is pure index arithmetic on the level grid (display
         rows flip for ``inv_y`` grids exactly as the tile render's do), and
         lon/lat are that level cell's centre. The value read is the tile's
-        window read narrowed to ONE cell, with the same Spark filter for
-        computed or object-store datasets. NaN/absent cells report
-        ``value: None`` (the reference's masked-pixel contract).
+        window read narrowed to ONE cell, with the same Spark filter when
+        that read declines. NaN/absent cells report ``value: None`` (the
+        reference's masked-pixel contract).
         """
         import math
 
@@ -298,9 +307,9 @@ class TileService:
         t_idx: int,
     ) -> float | None:
         """One-cell read: the driver window read narrowed to one cell, else
-        the level's Spark frame (computed or object-store datasets)."""
+        the level's Spark frame (a read the driver read declines)."""
         window = ((lat_idx, lat_idx + 1), (col, col + 1))
-        table = self.catalog.read_windows(ds_id, [var], [window], level, t_idx)
+        table = self.catalog.read_windows(ds_id, [var], [window], level, [t_idx])
         if table is not None:
             values = table.column(var).to_pylist()
         else:

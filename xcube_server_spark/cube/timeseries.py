@@ -10,14 +10,13 @@ Every route is one list of cell masks (a point's nearest cell, P5; a
 polygon's all-touched mask, J1; one mask per fan-out member, U2) answered
 per step as ``{totalCount, validCount, average}`` (A1/A2), two ways:
 
-- **Driver read** (``local_series_for_*``): for a stored cube with local
-  files, one pyarrow read of each mask's bounding window over every
-  ``time_idx`` partition of level 0 (``CubeCatalog.read_windows``), then
+- **Driver read** (``local_series_for_*``): one pyarrow read of each
+  mask's bounding window over every step of level 0
+  (``CubeCatalog.read_windows``, stored and computed cubes alike), then
   per-step counts and means over the mask cells with numpy. No Spark job;
   the latency class of the reference's in-process window reads. It
-  declines (returns None) for computed cubes, object-store cubes and
-  windows over ``WINDOW_ROW_BUDGET`` rows, which bounds a request's driver
-  memory.
+  declines (returns None) when that read does: object-store cubes, and
+  reads over its row budget, which bounds a request's driver memory.
 - **Spark plan** (``time_series_for_*``, all one ``_series_plan``): what
   the driver read declines; also the reference it is tested against and
   what the query registry runs. The scan is filtered to the index box of
@@ -53,10 +52,6 @@ from .catalog import CubeCatalog, window_filter
 from .grid import GridMeta, IndexWindow
 from .rasterize import Geometry, geometry_bbox, rasterize_mask
 from .reqparams import to_datetime
-
-# Most rows (window cells x time steps) a driver read may load, about 20 MB
-# of columns; larger windows run the Spark plan.
-WINDOW_ROW_BUDGET = 1_000_000
 
 _NO_CELLS = np.empty((0, 2), dtype=np.int64)
 _EPOCH = dt.datetime(1970, 1, 1)
@@ -117,14 +112,10 @@ def _window_series(
     """Per-mask rows ``{date, total_count, valid_count, average}`` from one
     driver read of the masks' bounding windows over every step of level 0,
     ``total_count`` being the rows found. None when the driver read
-    declines: no local files, or more than ``WINDOW_ROW_BUDGET`` rows."""
+    declines."""
     windows = [_box(m) for m in masks if len(m)]
     if not windows:
         return [[] for _ in masks]
-    steps = max(1, len(catalog.datasets[ds_id].grid.times))
-    cells = sum((i1 - i0) * (j1 - j0) for (i0, i1), (j0, j1) in windows)
-    if cells * steps > WINDOW_ROW_BUDGET:
-        return None
     table = catalog.read_windows(
         ds_id, ["time", "lat_idx", "lon_idx", var], windows
     )

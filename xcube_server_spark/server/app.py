@@ -35,10 +35,11 @@ with the request that launched it. Spark's scheduler multiplexes the jobs —
 set ``spark.scheduler.mode=FAIR`` for a production deployment so tile
 latency isn't starved by long analytics queries.
 
-Tiles and time series of a stored cube with local files are answered by a
-driver-side pyarrow read without a Spark job, and places by numpy masks over
-the driver-side place table; computed and object-store cubes, oversized
-time-series windows and a places ``query``/``expr`` filter run Spark plans.
+Tiles, ``GetFeatureInfo`` and time series are answered by a driver-side
+pyarrow read without a Spark job, of stored and computed cubes alike, and
+places by numpy masks over the driver-side place table. A read the driver
+read declines (object-store cubes, reads over its row budget) and a places
+``query``/``expr`` filter run Spark plans.
 """
 
 from __future__ import annotations

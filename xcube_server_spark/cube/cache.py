@@ -3,7 +3,9 @@ reference serves tiles from one LRU memory cache
 (``xcube_server/context.py:80-93``; mechanics ``xcube_server/cache.py:202-410``)
 and evicts once the cache passes 0.75 of its capacity.
 
-The TileService keeps PNG bytes in it; anything hashable→bytes works.
+The TileService keeps PNG bytes in it, and the driver read
+(``catalog.read_windows``) its decoded part files. A value is anything whose
+``len`` is its size in bytes.
 """
 
 from __future__ import annotations
@@ -34,14 +36,14 @@ class ByteCache:
     def __contains__(self, key) -> bool:
         return key in self._data
 
-    def get(self, key) -> bytes | None:
+    def get(self, key):
         with self._lock:
             value = self._data.get(key)
             if value is not None:
                 self._data.move_to_end(key)
             return value
 
-    def put(self, key, value: bytes) -> None:
+    def put(self, key, value) -> None:
         with self._lock:
             old = self._data.pop(key, None)
             if old is not None:

@@ -23,10 +23,13 @@ from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.paths import join_store_path, open_store_text
+from ..sources.paths import join_store_path, local_part_glob, open_store_text
+from .cache import ByteCache
 from .computed import Step, apply_computed, get_transform, step_table
 from .grid import GridMeta, IndexWindow, TileGridMeta
 from .places import load_place_group, union_place_groups
@@ -34,6 +37,10 @@ from .places import load_place_group, union_place_groups
 # Most rows (window cells x steps read) a driver read may load, about 20 MB
 # of columns; larger reads run the Spark plan.
 WINDOW_ROW_BUDGET = 1_000_000
+# Most bytes of decoded part files (cell indices and the columns read) the
+# driver read keeps, the size of the reference's zarr block LRU
+# (xcube_server/context.py:228).
+DECODED_BYTES = 256 * 2**20
 
 _RAW_SUFFIXES = (".zarr", ".levels", ".nc", ".nc4", ".h5", ".hdf5", ".tif", ".tiff")
 
@@ -105,10 +112,12 @@ class DatasetMeta:
 
 
 def window_filter(windows: list[IndexWindow]) -> Column:
-    """The cells in any of ``windows`` as a Spark filter: the twin of
-    ``CubeCatalog.read_windows``' pyarrow filter. ``between`` bounds reach
-    the parquet scan's ``PushedFilters`` (row-group pruning), also through
-    a computed cube's aggregate on the cell indices."""
+    """The cells in any of ``windows`` as a Spark filter, the cells
+    ``CubeCatalog.read_windows`` slices on the driver. ``between`` bounds
+    reach the parquet scan's ``PushedFilters``, also through a computed
+    cube's aggregate on the cell indices; with one row group per part file
+    (``write_cube``) the scan skips the part files whose min/max miss the
+    windows."""
     filt = None
     for (i0, i1), (j0, j1) in windows:
         box = (
@@ -142,11 +151,124 @@ def level_table(base_path: str, level: int) -> str:
     return target
 
 
+def _part_files(step_dir: str) -> list[str]:
+    """The part files of one ``time_idx`` partition, sorted; none when it
+    is missing or not local. Names starting with ``.`` or ``_`` (checksums,
+    ``_SUCCESS``) are skipped, as parquet readers skip them."""
+    return sorted(
+        os.path.join(d, name)
+        for d in local_part_glob(step_dir)
+        for name in os.listdir(d)
+        if name[0] not in "._"
+    )
+
+
+class _DecodedPart:
+    """One part file decoded for window reads. ``index[i - i0, j - j0]`` is
+    the row of cell ``(i, j)``, -1 where the file has none, over the box
+    ``origin = (i0, j0)`` of its cells; ``columns`` holds the columns read
+    so far (None for one the file lacks). ``len`` is its size in bytes, the
+    measure ``ByteCache`` bounds. The cell columns are rebuilt from index
+    positions, so no decoded copy of them is kept."""
+
+    def __init__(self, index, origin, cell_types, columns):
+        self.index = index
+        self.origin = origin
+        self.cell_types = cell_types
+        self.columns = columns
+
+    def __len__(self) -> int:
+        return self.index.nbytes + sum(
+            c.nbytes for c in self.columns.values() if c is not None
+        )
+
+    def take(self, windows: list[IndexWindow], columns: list[str]) -> pa.Table:
+        """``columns`` of the rows in any of ``windows``, each row once and
+        in file order."""
+        (a, b), (h, w) = self.origin, self.index.shape
+        boxes = [
+            ((max(i0, a), min(i1, a + h)), (max(j0, b), min(j1, b + w)))
+            for (i0, i1), (j0, j1) in windows
+        ]
+        boxes = [x for x in boxes if x[0][0] < x[0][1] and x[1][0] < x[1][1]]
+        rows = ii = jj = np.empty(0, dtype=np.int64)
+        if boxes:
+            r0, r1 = min(x[0][0] for x in boxes), max(x[0][1] for x in boxes)
+            c0, c1 = min(x[1][0] for x in boxes), max(x[1][1] for x in boxes)
+            sub = self.index[r0 - a:r1 - a, c0 - b:c1 - b]
+            if len(boxes) > 1:
+                inside = np.zeros(sub.shape, dtype=bool)
+                for (i0, i1), (j0, j1) in boxes:
+                    inside[i0 - r0:i1 - r0, j0 - c0:j1 - c0] = True
+                sub = np.where(inside, sub, -1)
+            ii, jj = np.nonzero(sub >= 0)
+            rows = sub[ii, jj]
+            order = np.argsort(rows, kind="stable")
+            rows, ii, jj = rows[order], ii[order] + r0, jj[order] + c0
+        cells = {"lat_idx": ii, "lon_idx": jj}
+        out = {}
+        for c in columns:
+            if c in cells:
+                out[c] = pa.array(cells[c], type=self.cell_types[c])
+            elif self.columns[c] is not None:
+                out[c] = self.columns[c].take(rows)
+        return pa.table(out)
+
+
+def _decoded_part(
+    parts: ByteCache, path: str, columns: list[str]
+) -> _DecodedPart | None:
+    """The part file at ``path`` decoded with at least ``columns``, from
+    ``parts`` when an earlier read decoded them. The key is the file's
+    identity, so a file that an append or a re-ingest rewrites is read
+    afresh. None when the decoded file would not fit in ``DECODED_BYTES``
+    (the read then declines)."""
+    stat = os.stat(path)
+    key = (path, stat.st_mtime_ns, stat.st_size)
+    cached = parts.get(key)
+    known = {} if cached is None else cached.columns
+    missing = [
+        c for c in columns if c not in known and c not in ("lat_idx", "lon_idx")
+    ]
+    if cached is not None and not missing:
+        return cached
+    read = ["lat_idx", "lon_idx", *missing] if cached is None else missing
+    with pq.ParquetFile(path) as reader:
+        table = reader.read(columns=read, use_threads=False)
+    if cached is None:
+        lat = table.column("lat_idx").to_numpy()
+        lon = table.column("lon_idx").to_numpy()
+        origin, shape = (0, 0), (0, 0)
+        if len(lat):
+            origin = (int(lat.min()), int(lon.min()))
+            shape = (int(lat.max()) - origin[0] + 1, int(lon.max()) - origin[1] + 1)
+        if 4 * shape[0] * shape[1] > DECODED_BYTES:
+            return None
+        index = np.full(shape, -1, dtype=np.int32)
+        index[lat - origin[0], lon - origin[1]] = np.arange(len(lat), dtype=np.int32)
+        if np.count_nonzero(index >= 0) != len(lat):
+            raise ValueError(f"{path}: more than one row for a cell")
+        cell_types = {c: table.schema.field(c).type for c in ("lat_idx", "lon_idx")}
+    else:
+        index, origin, cell_types = cached.index, cached.origin, cached.cell_types
+    new = {
+        c: table.column(c).combine_chunks() if c in table.column_names else None
+        for c in missing
+    }
+    decoded = _DecodedPart(index, origin, cell_types, {**known, **new})
+    if len(decoded) > DECODED_BYTES:
+        return None
+    parts.put(key, decoded)
+    return decoded
+
+
 class CubeCatalog:
     def __init__(self, spark: SparkSession):
         self.spark = spark
         self.datasets: dict[str, DatasetMeta] = {}
         self._df_cache: dict[tuple[str, int], DataFrame] = {}
+        # part files decoded by read_windows, keyed on file identity
+        self._parts = ByteCache(DECODED_BYTES)
         # driver-side table of all configured PlaceGroups (None until a
         # config sets them)
         self.places: pd.DataFrame | None = None
@@ -282,12 +404,13 @@ class CubeCatalog:
         windows: list[IndexWindow],
         level: int = 0,
         steps: list[int] | None = None,
-    ) -> "pyarrow.Table | None":
-        """Driver-side pyarrow read of the rows in any of ``windows`` at
-        ``steps`` (every step when None): a window ``((i0, i1), (j0, j1))``
-        holds the cells ``i0 <= lat_idx < i1``, ``j0 <= lon_idx < j1``.
-        Partition-dir pruning on time_idx, then row-group predicate pruning
-        on the indices.
+    ) -> "pa.Table | None":
+        """Driver-side read of the rows in any of ``windows`` at ``steps``
+        (every step when None): a window ``((i0, i1), (j0, j1))`` holds the
+        cells ``i0 <= lat_idx < i1``, ``j0 <= lon_idx < j1``. A step's
+        ``time_idx`` partition names its part files; each part file is
+        decoded once (``_decoded_part``) and a read slices its cell index,
+        so a row in several windows comes back once, and in file order.
 
         A computed step reads its input steps (``step_sources``), tags their
         rows with the step's ``time`` and applies the transform's driver
@@ -295,34 +418,23 @@ class CubeCatalog:
 
         This is the one local read of the serving path (tiles,
         ``GetFeatureInfo``, time series). None when it declines: no local
-        files to read (object-store datasets), or more than
+        files to read (object-store datasets), more than
         ``WINDOW_ROW_BUDGET`` rows (window cells x steps read, for a
-        computed dataset its input steps). Callers then answer with a Spark
-        plan."""
-        import pyarrow as pa
-        import pyarrow.dataset as pads
-
-        from ..sources.paths import local_part_glob
-
+        computed dataset its input steps), or a part file too large to
+        hold decoded within ``DECODED_BYTES``. Callers then answer with a
+        Spark plan."""
         meta = self.datasets[identifier]
         bases, table = self.step_sources(identifier, steps)
         cells = sum((i1 - i0) * (j1 - j0) for (i0, i1), (j0, j1) in windows)
         read = len(bases) * sum(len(idx) for _, idx in table)
         if not all(bases) or cells * read > WINDOW_ROW_BUDGET:
             return None
-        f = pads.field
-        filt = None
-        for (i0, i1), (j0, j1) in windows:
-            box = (
-                (f("lat_idx") >= i0) & (f("lat_idx") < i1)
-                & (f("lon_idx") >= j0) & (f("lon_idx") < j1)
-            )
-            filt = box if filt is None else filt | box
         if meta.computed:
             keys = ["time", "lat_idx", "lon_idx"]
             read_cols = keys[1:] + [c for c in columns if c not in keys]
         else:
             read_cols = columns
+        names = read_cols + ["time"] if meta.computed else read_cols
         inputs = []
         for base in bases:
             # level_table follows a `.link` pointer, so grafted levels
@@ -330,22 +442,23 @@ class CubeCatalog:
             level_dir = level_table(base, level)
             parts = []
             for label, idx in table:
-                dirs = [
-                    d for i in idx
-                    for d in local_part_glob(f"{level_dir}/time_idx={i}")
-                ]
-                if not dirs:
-                    continue
-                part = pads.dataset(
-                    [pads.dataset(d, format="parquet") for d in dirs]
-                ).to_table(columns=read_cols, filter=filt)
-                if meta.computed:
-                    when = pa.scalar(np.datetime64(label, "us"))
-                    part = part.append_column("time", pa.repeat(when, len(part)))
-                parts.append(part)
+                when = pa.scalar(np.datetime64(label, "us"))
+                for i in idx:
+                    for path in _part_files(f"{level_dir}/time_idx={i}"):
+                        decoded = _decoded_part(self._parts, path, read_cols)
+                        if decoded is None:
+                            return None
+                        part = decoded.take(windows, read_cols)
+                        if meta.computed:
+                            part = part.append_column(
+                                "time", pa.repeat(when, len(part))
+                            )
+                        parts.append(part)
             if not parts:
                 return None
-            inputs.append(pa.concat_tables(parts))
+            inputs.append(
+                pa.concat_tables(parts, promote_options="default").select(names)
+            )
         if not meta.computed:
             return inputs[0]
         _, _, reduce = get_transform(meta.function)

@@ -240,9 +240,10 @@ def morton_interleave_expr(lat_col: str = "lat_idx", lon_col: str = "lon_idx",
 
     Interleaves the bits of (lat_idx, lon_idx) into one long: sorting or
     range-partitioning by this key keeps 2-D-adjacent cells adjacent in the
-    file, so parquet row-group min/max stats prune BOTH dimensions of a bbox
-    query — lat-band sorting alone only prunes latitude. Pure Catalyst
-    expression (shift/or aggregate over bit positions), no UDF.
+    file, so the part files' min/max stats (one row group per part file,
+    ``write_cube``) prune BOTH dimensions of a bbox query — lat-band sorting
+    alone only prunes latitude. Pure Catalyst expression (shift/or
+    aggregate over bit positions), no UDF.
     """
     terms = []
     for b in range(bits):

@@ -14,7 +14,8 @@ on the step's source sits in front.
 
 ``render_tiles`` is the Spark plan of the same render and the scalable
 batch form: ALL tiles of a zoom level in one job, window filter
-(``catalog.window_filter``, pushed to parquet row-group pruning), then an
+(``catalog.window_filter``, pushed into the parquet scan, which skips the
+part files whose min/max miss it), then an
 ``applyInPandas`` render grouped by (tile_y, tile_x) — this is how a
 pre-warm/export job renders millions of tiles without per-tile job
 overhead. A single tile renders through it only when the driver read
@@ -145,9 +146,10 @@ class TileService:
     overhead, so repeated tile hits must not touch Spark at all.
 
     A miss reads its window with pyarrow on the driver
-    (``CubeCatalog.read_windows``: the step's ``time_idx`` partitions,
-    row-group pruning on the cell indices) in milliseconds — the latency
-    class of the reference's in-process dask reads. When that read declines
+    (``CubeCatalog.read_windows``: a slice of the cell index of each part
+    file of the step's ``time_idx`` partition, each file decoded once and
+    kept) in milliseconds — the latency class of the reference's
+    in-process dask reads. When that read declines
     (a cube in an object store), the tile renders through the distributed
     ``render_tiles`` plan instead.
 

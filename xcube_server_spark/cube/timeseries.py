@@ -11,7 +11,7 @@ polygon's all-touched mask, J1; one mask per fan-out member, U2) answered
 per step as ``{totalCount, validCount, average}`` (A1/A2), two ways:
 
 - **Driver read** (``local_series_for_*``): one pyarrow read of each
-  mask's bounding window over every step of level 0
+  mask's bounding window over the steps of level 0 within the date bounds
   (``CubeCatalog.read_windows``, stored and computed cubes alike), then
   per-step counts and means over the mask cells with numpy. No Spark job;
   the latency class of the reference's in-process window reads. It
@@ -101,6 +101,22 @@ def _iso_second(micros: int) -> str:
     return (_EPOCH + dt.timedelta(seconds=seconds)).isoformat() + "Z"
 
 
+def _steps_between(
+    catalog: CubeCatalog, ds_id: str, start: str | None, end: str | None
+) -> list[int] | None:
+    """The steps whose rows ``startDate``/``endDate`` may keep (every step
+    when both are None), from the time axis: a superset of what the row
+    filter on ``time`` keeps. A label names its step's time to the second,
+    so each bound widens by one second."""
+    if start is None and end is None:
+        return None
+    lo = -np.inf if start is None else _micros(start) - 1_000_000
+    hi = np.inf if end is None else _micros(end) + 1_000_000
+    return [
+        k for k, t in enumerate(catalog.times(ds_id)) if lo <= _micros(t) <= hi
+    ]
+
+
 def _window_series(
     catalog: CubeCatalog,
     ds_id: str,
@@ -110,14 +126,18 @@ def _window_series(
     end: str | None,
 ) -> list[list[dict]] | None:
     """Per-mask rows ``{date, total_count, valid_count, average}`` from one
-    driver read of the masks' bounding windows over every step of level 0,
-    ``total_count`` being the rows found. None when the driver read
-    declines."""
+    driver read of the masks' bounding windows over the steps of level 0
+    that the date bounds may keep (``_steps_between``), ``total_count``
+    being the rows found; the exact bounds then filter the rows on
+    ``time``. None when the driver read declines."""
     windows = [_box(m) for m in masks if len(m)]
     if not windows:
         return [[] for _ in masks]
+    steps = _steps_between(catalog, ds_id, start, end)
+    if steps == []:
+        return [[] for _ in masks]
     table = catalog.read_windows(
-        ds_id, ["time", "lat_idx", "lon_idx", var], windows
+        ds_id, ["time", "lat_idx", "lon_idx", var], windows, steps=steps
     )
     if table is None:
         return None

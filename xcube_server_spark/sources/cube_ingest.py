@@ -8,9 +8,9 @@ The reference opens NetCDF/zarr lazily per request
   (FIXTURES.md F-1: 5 timesteps, extent (0, 50, 5, 52.5), smooth
   sin/cos fields, all-NaN timesteps for one variable) — generated
   DISTRIBUTEDLY from ``spark.range`` so the same code scales to any grid;
-- the generic ``write_cube`` layout step (partitioning + sort for row-group
-  pruning) any real reader (e.g. a mapInPandas over zarr chunk manifests)
-  would feed;
+- the generic ``write_cube`` layout step (partitioning + sort, so each
+  part file covers a tight cell box) any real reader (e.g. a mapInPandas
+  over zarr chunk manifests) would feed;
 - LOD pyramid materialization by stride decimation
   (parity: ``xcube_server/mldataset.py:296-304``).
 
@@ -18,10 +18,15 @@ NaN→NULL normalization happens HERE, once (SURVEY.md §7.1 M0): downstream
 every aggregate gets reference NaN semantics from plain Spark NULL handling.
 
 100 TB layout: partition by time_idx, then range-partition each time slice
-into spatial row bands sorted by (lat_idx, lon_idx) — parquet row-group
-min/max stats then prune both tile-window and bbox queries to the few
-row-groups that intersect. At cluster scale add a coarse spatial block
-column (``lat_idx div B``) as a second partition key.
+into spatial row bands sorted by (lat_idx, lon_idx). Spark's writer puts
+a part file smaller than its 128 MB parquet block in ONE row group, as
+every band file written here is, so the unit a Spark scan prunes by
+min/max stats is the part file: a tile window or bbox reads the few band
+files that intersect it.
+The driver read (``CubeCatalog.read_windows``) does not prune at all: it
+decodes each part file once and slices a cell index. At cluster scale add
+a coarse spatial block column (``lat_idx div B``) as a second partition
+key.
 """
 
 from __future__ import annotations
@@ -127,15 +132,20 @@ def write_cube(
     """Materialize the cube: level-0 table, LOD pyramid, dim tables.
 
     Layout: partitioned by ``time_idx``, each slice range-partitioned into
-    latitude bands and sorted by (lat_idx, lon_idx) — the Spark analog of the
-    reference's chunk-aligned tiles (``xcube_server/mldataset.py:417-458``):
-    a tile query touches only row-groups whose (lat_idx, lon_idx) min/max
-    intersect the tile window.
+    ``spatial_bands`` latitude bands and sorted by (lat_idx, lon_idx) — the
+    Spark analog of the reference's chunk-aligned tiles
+    (``xcube_server/mldataset.py:417-458``). Each band is one part file of
+    one row group, so a Spark tile query reads only the band files whose
+    (lat_idx, lon_idx) min/max intersect the tile window.
 
     ``layout="zorder"`` sorts each slice by the Morton code instead
-    (``cube.grid.morton_interleave_expr``): row groups then carry tight
-    min/max on BOTH spatial axes, the right choice when bbox queries dominate
-    over full-width tile rows.
+    (``cube.grid.morton_interleave_expr``): each part file then covers a
+    Morton range, with min/max tight on BOTH spatial axes, the right choice
+    when bbox queries dominate over full-width tile rows.
+
+    The driver read decodes whole part files once and keeps them
+    (``CubeCatalog.read_windows``), so smaller row groups would not make it
+    cheaper.
     """
     tg = TileGridMeta.create(grid.width, grid.height, tile_size, grid.extent)
     level = cube

@@ -47,7 +47,8 @@ from ..sources.paths import join_store_path
 class CubeLevelAppendSink:
     """foreachBatch sink maintaining a written cube's LOD pyramid
     incrementally. ``spatial_bands`` mirrors the ``write_cube`` layout knob
-    (range partition by lat band + sort for row-group pruning)."""
+    (range partition by lat band + sort, so each part file covers a tight
+    cell box)."""
 
     def __init__(self, base_path: str, num_levels: int, spatial_bands: int = 2):
         self.base_path = base_path

@@ -88,6 +88,57 @@ def test_series_plan_prunes_to_mask_window_and_broadcasts_mask(spark, tmp_path):
         assert count_exchanges(df) == 2, plan
 
 
+def test_series_plan_prunes_time_idx_to_the_date_bounds(spark, tmp_path):
+    """A date-ranged Spark series reads only the ``time_idx`` partitions of
+    the steps within its bounds (``_steps_between``, the steps the driver
+    read takes too): the step list lands in the scan's ``PartitionFilters``.
+    The row filter on ``time`` stays, so the rows equal the driver read's
+    with and without bounds, and for a range that holds no step."""
+    import re
+
+    import numpy as np
+
+    from xcube_server_spark.cube.catalog import CubeCatalog
+    from xcube_server_spark.cube.rasterize import rasterize_mask
+    from xcube_server_spark.cube.timeseries import (
+        _series_plan,
+        _window_series,
+        time_series_for_geometry,
+    )
+    from xcube_server_spark.plans.explain import formatted_plan
+    from xcube_server_spark.sources.cube_ingest import synth_demo_cube, write_cube
+
+    base = str(tmp_path / "demo")
+    cube, grid = synth_demo_cube(spark, width=64, height=32)
+    _, tg = write_cube(cube, grid, base, tile_size=32)
+    cat = CubeCatalog(spark)
+    cat.register_written_cube("demo", base, grid, tg, ["conc_chl"])
+    poly = {"type": "Polygon", "coordinates": [
+        [[1.0, 51.0], [2.0, 51.0], [2.0, 52.0], [1.0, 52.0], [1.0, 51.0]]]}
+    # steps: 01-16, 01-25, 01-26, 01-28 09:58:11, 01-30
+    for start, end, steps in (
+        ("2017-01-25", "2017-01-28 09:58:11", "IN (1,2,3)"),
+        ("2017-01-26", "2017-01-27", "= 2"),
+    ):
+        df = time_series_for_geometry(cat, "demo", "conc_chl", poly, start, end)
+        part = re.findall(r"PartitionFilters: \[([^\]]*)\]", formatted_plan(df))
+        assert part and re.search(rf"time_idx#\d+ {re.escape(steps)}", part[0]), part
+    masks = [rasterize_mask(poly, grid), np.array([[3, 40]])]
+    for start, end in ((None, None), ("2017-01-25", "2017-01-28 09:58:11"),
+                       (None, "2017-01-26 10:50:17"), ("2017-01-29", None),
+                       ("2017-01-26T11:00:00", "2017-01-27")):
+        rows = _series_plan(cat, "demo", "conc_chl", masks, start, end).collect()
+        got = _window_series(cat, "demo", "conc_chl", masks, start, end)
+        for gi, mine in enumerate(got):
+            want = [r for r in rows if r["geometry_id"] == gi]
+            assert [(r["date"], r["total_count"], r["valid_count"]) for r in mine] == [
+                (r["date"], r["total_count"], r["valid_count"]) for r in want
+            ], (start, end)
+            for a, b in zip(mine, want):
+                assert a["average"] == pytest.approx(b["average"], rel=1e-12)
+    assert got == [[], []]  # no step lies in the last range
+
+
 def test_render_tiles_pushes_tile_window_into_scan(spark, tmp_path):
     """T1/T2: ``render_tiles(tiles=[(x, y)])`` filters the tile's index
     window with ``between`` bounds that reach the parquet scan's

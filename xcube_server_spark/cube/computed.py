@@ -20,9 +20,10 @@ triple:
 - ``reduce(*tables, **params) -> pyarrow.Table``: the same computation on
   the driver, over ``CubeCatalog.read_windows``' rows of the input steps
   tagged with their output step's ``time``; it groups by ``time`` and the
-  cell. Like the reference's ``ComputedMultiLevelDataset``, a computed
-  dataset is then served by the same in-process tile and time-series code
-  as a stored one.
+  cell (``resample_in_time_table`` with ``np.bincount`` over a dense
+  step × cell key, not a hash ``group_by``). Like the reference's
+  ``ComputedMultiLevelDataset``, a computed dataset is then served by the
+  same in-process tile and time-series code as a stored one.
 """
 
 from __future__ import annotations
@@ -31,7 +32,9 @@ import datetime as _dt
 from collections.abc import Callable
 from typing import TYPE_CHECKING
 
+import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -118,19 +121,51 @@ def resample_in_time(cube: DataFrame, period: str = "1W") -> DataFrame:
     ])
 
 
+def step_codes(when: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """The distinct values of ``when`` in order, and each row's index into
+    them. Rows come in runs of one step, so only the run heads are
+    factorized and their codes repeated, not every row sorted."""
+    heads = np.r_[0, np.flatnonzero(when[1:] != when[:-1]) + 1][: len(when)]
+    values, run_code = np.unique(when[heads], return_inverse=True)
+    return values, np.repeat(run_code, np.diff(heads, append=len(when)))
+
+
+def _index_codes(idx: np.ndarray) -> tuple[np.ndarray, int]:
+    """Each row's rank among the distinct values of a grid index column,
+    and how many there are: one count over the axis, no sort."""
+    rank = np.cumsum(np.bincount(idx) > 0, dtype=np.int32)
+    return (rank - 1).take(idx), int(rank.max(initial=0))
+
+
 def resample_in_time_table(table: pa.Table, period: str = "1W") -> pa.Table:
-    """``resample_in_time`` on the driver. pyarrow's hash mean skips nulls,
-    propagates NaN, is null for an all-null group and accumulates in
-    double: what ``F.avg(c).cast("float")`` does."""
+    """``resample_in_time`` on the driver: ``np.bincount`` sums and counts
+    over a dense key, the output step and the cell's rank among the rows
+    and columns the table holds. Like ``F.avg(c).cast("float")`` it skips
+    nulls, propagates NaN, is null for an all-null group and adds in
+    double in row order. Groups come out in key order."""
     keys = ["time", "lat_idx", "lon_idx"]
     values = [c for c in table.column_names if c not in keys]
-    out = table.group_by(keys, use_threads=False).aggregate(
-        [(c, "mean") for c in values]
-    )
-    return pa.table({
-        **{k: out[k] for k in keys},
-        **{c: out[f"{c}_mean"].cast(pa.float32()) for c in values},
-    })
+    when = table.column("time").to_numpy().astype("datetime64[us]")
+    times, step = step_codes(when.astype(np.int64))
+    row, n_rows = _index_codes(table.column("lat_idx").to_numpy())
+    col, n_cols = _index_codes(table.column("lon_idx").to_numpy())
+    key = step * n_rows + row
+    key *= n_cols
+    key += col
+    size = len(times) * n_rows * n_cols
+    held = np.bincount(key, minlength=size) > 0
+    some_row = np.empty(size, dtype=np.intp)
+    some_row[key] = np.arange(len(key))
+    out = table.select(keys).take(some_row[held])
+    for c in values:
+        column = table.column(c)
+        valid = pc.is_valid(column).to_numpy()
+        v = pc.fill_null(column, 0).to_numpy()
+        sums = np.bincount(key, weights=v, minlength=size)[held]
+        n = np.bincount(key, weights=valid, minlength=size)[held]
+        mean = (sums / np.maximum(n, 1)).astype(np.float32)
+        out = out.append_column(c, pa.array(mean, mask=n == 0))
+    return out
 
 
 register_transform(

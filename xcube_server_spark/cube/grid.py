@@ -180,9 +180,13 @@ class GridMeta:
         return (north - south) / self.height
 
     def lon_of(self, lon_idx: int) -> float:
+        """Cell-centre longitude of a column index, or element-wise of a
+        numpy array of them (same arithmetic, same floats)."""
         return self.extent[0] + (lon_idx + 0.5) * self.res_lon
 
     def lat_of(self, lat_idx: int) -> float:
+        """Cell-centre latitude of a row index, or element-wise of a numpy
+        array of them."""
         if self.inv_y:
             return self.extent[1] + (lat_idx + 0.5) * self.res_lat
         return self.extent[3] - (lat_idx + 0.5) * self.res_lat

@@ -7,13 +7,17 @@ so this is a self-contained numpy implementation with the same contract:
 
 - *all_touched*: a cell is in the mask if the geometry touches any part of
   the cell, not just its center — interior cells via even-odd scanline over
-  cell centers, boundary cells by walking each polygon edge at sub-cell
-  resolution. Exact for rectilinear polygons (the golden-test shapes);
+  cell centers, boundary cells by sampling each polygon edge at quarter-cell
+  steps. The samples of all edges are indexed in one numpy pass with
+  ``GridMeta.contains`` / ``lat_idx_of`` / ``lon_idx_of``'s arithmetic.
+  Exact for rectilinear polygons (the golden-test shapes);
   conservative-correct for slanted edges.
 
 The mask is produced on the driver over the *bbox-clipped index window*
 (small by construction — the reference does the same clip first,
-``controllers/time_series.py:166-175``) and then broadcast for the semi-join.
+``controllers/time_series.py:166-175``). The time-series driver read
+(``timeseries._window_series``) selects its rows with it; only the Spark
+fallback, ``timeseries._series_plan``, broadcasts it for a join.
 """
 
 from __future__ import annotations
@@ -98,16 +102,19 @@ def rasterize_mask(
     west, south, east, north = geometry_bbox(geom)
     i0, i1 = sorted((grid.lat_idx_of(north), grid.lat_idx_of(south)))
     j0, j1 = grid.lon_idx_of(west), grid.lon_idx_of(east)
-    lat_c = np.array([grid.lat_of(i) for i in range(i0, i1 + 1)])
-    lon_c = np.array([grid.lon_of(j) for j in range(j0, j1 + 1)])
-    jj, ii = np.meshgrid(np.arange(j0, j1 + 1), np.arange(i0, i1 + 1))
-    px, py = np.meshgrid(lon_c, lat_c)
+    rows, cols = np.arange(i0, i1 + 1), np.arange(j0, j1 + 1)
+    jj, ii = np.meshgrid(cols, rows)
+    px, py = np.meshgrid(grid.lon_of(cols), grid.lat_of(rows))
     mask = points_in_geometry(px, py, geom)
 
     if all_touched:
         # Mark every cell each edge passes through (DDA-style sampling at
-        # quarter-cell resolution — conservative for all_touched parity).
+        # quarter-cell resolution — conservative for all_touched parity):
+        # the samples of all edges are kept and indexed as one array, with
+        # GridMeta.contains / lat_idx_of / lon_idx_of's arithmetic.
+        gw, gs, ge, gn = grid.extent
         step = min(grid.res_lon, grid.res_lat) / 4.0
+        exs, eys = [], []
         for poly in _poly_rings(geom):
             for ring in poly:
                 for k in range(len(ring)):
@@ -116,13 +123,20 @@ def rasterize_mask(
                     length = max(abs(x2 - x1), abs(y2 - y1))
                     n = max(int(length / step) + 1, 2)
                     ts = np.linspace(0.0, 1.0, n)
-                    exs, eys = x1 + ts * (x2 - x1), y1 + ts * (y2 - y1)
-                    for ex, ey in zip(exs, eys):
-                        if not grid.contains(ex, ey):
-                            continue
-                        ei, ej = grid.lat_idx_of(ey), grid.lon_idx_of(ex)
-                        if i0 <= ei <= i1 and j0 <= ej <= j1:
-                            mask[ei - i0, ej - j0] = True
+                    exs.append(x1 + ts * (x2 - x1))
+                    eys.append(y1 + ts * (y2 - y1))
+        ex, ey = np.concatenate(exs), np.concatenate(eys)
+        on = (gw <= ex) & (ex <= ge) & (gs <= ey) & (ey <= gn)
+        ex, ey = ex[on], ey[on]
+        if grid.inv_y:
+            ei = np.floor((ey - gs) / grid.res_lat)
+        else:
+            ei = np.floor((gn - ey) / grid.res_lat)
+        ei = np.clip(ei.astype(np.int64), 0, grid.height - 1)
+        ej = np.floor((ex - gw) / grid.res_lon)
+        ej = np.clip(ej.astype(np.int64), 0, grid.width - 1)
+        hit = (i0 <= ei) & (ei <= i1) & (j0 <= ej) & (ej <= j1)
+        mask[ei[hit] - i0, ej[hit] - j0] = True
 
     sel = mask.reshape(-1)
     return np.stack([ii.reshape(-1)[sel], jj.reshape(-1)[sel]], axis=1)

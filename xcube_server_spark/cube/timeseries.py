@@ -22,7 +22,8 @@ per step as ``{totalCount, validCount, average}`` (A1/A2), two ways:
   what the query registry runs. The scan is filtered to the index box of
   all mask cells, a ``between`` on ``lat_idx``/``lon_idx`` pushed into
   parquet (for a point a one-cell box, pruning row groups as an equality
-  would); the mask is broadcast and joined, so the cube side never
+  would), and to the ``time_idx`` partitions of the steps within the date
+  bounds; the mask is broadcast and joined, so the cube side never
   shuffles; the one shuffle is ``masked_mean_per_step``'s aggregate.
 
 Both give a row only for steps with stored rows, in time order, dated as
@@ -49,6 +50,7 @@ from pyspark.sql.functions import broadcast
 from ..functions.scalars import iso_ts
 from ..operators.timeseries import masked_mean_per_step
 from .catalog import CubeCatalog, window_filter
+from .computed import step_codes
 from .grid import GridMeta, IndexWindow
 from .rasterize import Geometry, geometry_bbox, rasterize_mask
 from .reqparams import to_datetime
@@ -130,7 +132,8 @@ def _window_series(
     that the date bounds may keep (``_steps_between``), ``total_count``
     being the rows found; the exact bounds then filter the rows on
     ``time``. None when the driver read declines."""
-    windows = [_box(m) for m in masks if len(m)]
+    boxes = [_box(m) for m in masks]
+    windows = [b for b, m in zip(boxes, masks) if len(m)]
     if not windows:
         return [[] for _ in masks]
     steps = _steps_between(catalog, ds_id, start, end)
@@ -149,24 +152,22 @@ def _window_series(
         keep &= when >= _micros(start)
     if end is not None:
         keep &= when <= _micros(end)
-    times, step_of = np.unique(when, return_inverse=True)
+    times, step_of = step_codes(when)
     lat_idx = table.column("lat_idx").to_numpy()
     lon_idx = table.column("lon_idx").to_numpy()
     column = table.column(var)
     valid = pc.is_valid(column).to_numpy()
     values = pc.fill_null(column, 0).to_numpy().astype(np.float64)
     out = []
-    for m in masks:
+    for m, ((i0, i1), (j0, j1)) in zip(masks, boxes):
         hit = np.zeros(len(when), dtype=bool)
         if len(m):
-            i0, j0 = m.min(axis=0)
-            shape = m.max(axis=0) - (i0, j0) + 1
-            inside = np.zeros(shape, dtype=bool)
+            inside = np.zeros((i1 - i0, j1 - j0), dtype=bool)
             inside[m[:, 0] - i0, m[:, 1] - j0] = True
             rows = np.flatnonzero(
                 keep
-                & (lat_idx >= i0) & (lat_idx < i0 + shape[0])
-                & (lon_idx >= j0) & (lon_idx < j0 + shape[1])
+                & (lat_idx >= i0) & (lat_idx < i1)
+                & (lon_idx >= j0) & (lon_idx < j1)
             )
             hit[rows] = inside[lat_idx[rows] - i0, lon_idx[rows] - j0]
         ok = hit & valid
@@ -195,13 +196,19 @@ def _series_plan(
 ) -> DataFrame:
     """``_window_series``' rows as one Spark plan: ``{geometry_id, date,
     total_count, valid_count, average}`` per mask and step, ``total_count``
-    being the rows found, ordered by mask and time."""
+    being the rows found, ordered by mask and time. Like the driver read it
+    keeps only the ``time_idx`` partitions of ``_steps_between``, then
+    filters the rows on ``time``."""
     mask_df = catalog.spark.createDataFrame(
         [(gi, int(a), int(b)) for gi, m in enumerate(masks) for a, b in m],
         "geometry_id int, lat_idx int, lon_idx int",
     )
     box = _box(np.concatenate([_NO_CELLS, *masks]))
-    df = catalog.cube(ds_id).filter(window_filter([box])).join(
+    df = catalog.cube(ds_id)
+    steps = _steps_between(catalog, ds_id, start, end)
+    if steps is not None:
+        df = df.filter(F.col("time_idx").isin(steps))
+    df = df.filter(window_filter([box])).join(
         broadcast(mask_df), ["lat_idx", "lon_idx"]
     )
     if start is not None:
